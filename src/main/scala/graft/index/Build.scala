@@ -14,7 +14,8 @@ import graft.query.BM25
   *   → tokenizer flatMap (narrow; the one generator) emitting posting
   *     rows PLUS one null-term sentinel row per doc carrying the doc's
   *     stats (dl, maxTf, uniq, ts) — all known inside the tokenize call
-  *   → staging postings parquet (ONE tokenize pass feeds all consumers)
+  *   → staging postings parquet (ONE tokenize pass feeds all consumers;
+  *     deleted once the build commits)
   *   → doc_stats = narrow filter over the sentinel rows (NO shuffle —
   *     the groupBy(docId) re-shuffle of the full posting set is gone)
   *   → heavy-term detection over a seeded sample     [tiny shuffle]
@@ -48,7 +49,9 @@ object Build {
     * small-corpus tests pin specific salting outcomes). */
   /** `stagingMode`:
     *  - "parquet": materialize the tokenize pass as a staging parquet
-    *    dir (inspectable, survives the JVM; the tests read it),
+    *    dir; the sha gate runs as soon as it lands, and the dir is
+    *    deleted once the build commits (no reader of a built index
+    *    needs it),
     *  - "cache": persist the postings MEMORY_AND_DISK_SER in the block
     *    manager — skips the parquet encode/decode round-trip; spills to
     *    executor disk at scale like any shuffle, recomputes from lineage
@@ -243,6 +246,9 @@ object Build {
       // a true violation count further from zero, never mask one
       val shaViol = shaAcc.map(_.value.toLong).getOrElse(0L)
       require(shaViol == 0, s"$shaViol rows fail the sha256 ingest invariant")
+      if (cfg.stagingMode == "parquet")
+        SegmentStore.fs(stagingDir)
+          .delete(new org.apache.hadoop.fs.Path(stagingDir), true)
       res.copy(shaViolations = shaViol)
     } finally {
       if (cfg.stagingMode == "cache") postings.unpersist(blocking = false)

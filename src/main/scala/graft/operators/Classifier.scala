@@ -93,7 +93,10 @@ object Classifier {
         val md = java.security.MessageDigest.getInstance("MD5")
         val dense = new Array[Double](Dim) // reused scratch per partition
         it.map { case (id, text, y, holdout) =>
-          val toks = text.toLowerCase.split("\\s+").filter(_.nonEmpty)
+          // ROOT: a Turkish default locale would fold "I" to a dotless "ı"
+          // and hash the same text to other buckets
+          val toks = text.toLowerCase(java.util.Locale.ROOT)
+            .split("\\s+").filter(_.nonEmpty)
           java.util.Arrays.fill(dense, 0.0)
           var nnz = 0
           toks.foreach { t =>

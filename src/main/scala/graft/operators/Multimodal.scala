@@ -12,9 +12,10 @@ import java.nio.{ByteBuffer, ByteOrder}
   * Decode is REAL for every codec-free container that parses in pure
   * Scala — WAV (RIFF PCM, 8/16-bit, any channel count), PPM (binary
   * P6) and BMP (24bpp uncompressed) — implemented from their public
-  * byte layouts below. Only compressed codecs (jpeg/png, which need
-  * zlib/DCT stacks this sandbox doesn't ship) keep the clearly-marked
-  * deterministic FAKE. A payload that fails to parse falls back to the
+  * byte layouts below. The compressed codecs (jpeg/png) keep the
+  * clearly-marked deterministic FAKE by choice, not for want of a
+  * decoder: the JDK's ImageIO ships png and jpeg readers, but decoding
+  * them is not wired in here. A payload that fails to parse falls back to the
   * fake path with `frames = -1` — the poison-pill discipline a crawl
   * pipeline needs (one corrupt file must not kill a 100 TB job), and
   * the sentinel keeps failures countable downstream.

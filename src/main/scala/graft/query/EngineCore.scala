@@ -109,9 +109,9 @@ final case class TermPostings(term: String, qtf: Int, df: Long,
   * semantics — Engine delegates here, so the WAND≡exhaustive and
   * golden suites pin this class. */
 object EngineCore {
-  /** Delete-variant entry budget for the spell index (~70 B/entry in a
-    * boxed-key hash map → ~2 GB at this cap; a 150k natural-language
-    * vocab needs ~6M). Vocabularies whose variant count exceeds it get
+  /** Delete-variant entry budget for the spell index (~7 B/entry once
+    * built, ~25 B/entry at the build's peak → ~0.75 GB at this cap; a
+    * 150k natural-language vocab needs ~6M). Vocabularies whose variant count exceeds it get
     * the bounded generate-and-probe fallback instead of an OOM inside
     * the first corrected query. */
   val MaxSpellIndexEntries: Long = 30000000L

@@ -163,13 +163,11 @@ final class PhraseCore(posDir: String,
                        entries: Map[String, Array[SegmentStore.DictEntry]])
     extends Serializable {
 
-  @transient private var readerTL: ThreadLocal[PosReader] = _
+  @transient private lazy val readerTL = new ThreadLocal[PosReader]
   private def reader: PosReader = {
-    if (readerTL == null) synchronized {
-      if (readerTL == null)
-        readerTL = ThreadLocal.withInitial(() => new PosReader(posDir))
-    }
-    readerTL.get()
+    var r = readerTL.get()
+    if (r == null) { r = new PosReader(posDir); readerTL.set(r) }
+    r
   }
 
   def search(phrase: String): Array[(Long, Long, Long)] = {
@@ -179,8 +177,10 @@ final class PhraseCore(posDir: String,
       t => entries.getOrElse(t, Array.empty).flatMap(e => r.record(e)._2))
   }
 
-  def closeThreadReader(): Unit =
-    if (readerTL != null) { reader.close(); readerTL.remove() }
+  def closeThreadReader(): Unit = {
+    val r = readerTL.get()
+    if (r != null) { readerTL.remove(); r.close() }
+  }
 }
 
 object PhraseCore {

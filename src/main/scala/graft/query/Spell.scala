@@ -138,10 +138,24 @@ object Spell {
     * Hash collisions are harmless: every candidate is distance-verified.
     * Per-variant lists are built in df-descending term order and capped,
     * so crowded variants keep exactly the candidates an argmax-df policy
-    * could pick. */
+    * could pick.
+    *
+    * Layout: flat primitive arrays, looked up by binary search.
+    *  - `terms`/`dfs`: the vocabulary sorted df-descending, then
+    *    lexicographically; a term id is a position here.
+    *  - `keys`: the distinct variant hashes, sorted ascending.
+    *  - `offsets`: bucket k is `ids(offsets(k) until offsets(k + 1))`.
+    *  - `ids`: every bucket's term ids, ascending — which IS the
+    *    df-descending insertion order — capped at `MaxListLen`.
+    *  - `truncated`: the sorted hashes of the buckets that hit the cap.
+    * That is about 7 B per entry beside the term strings; the boxed
+    * `HashMap[java.lang.Long, Array[Int]]` it replaces held about 22 B
+    * (seed-1 benchmark vocabulary, 89,484 terms: 17.0 MiB against
+    * 54.0 MiB without the term strings, 21.2 MiB against 58.3 MiB as
+    * loaded from the artifact). */
   final class DeleteIndex private (terms: Array[String], dfs: Array[Long],
-                                   map: java.util.HashMap[java.lang.Long, Array[Int]],
-                                   truncated: java.util.HashSet[java.lang.Long]) {
+                                   keys: Array[Long], offsets: Array[Int],
+                                   ids: Array[Int], truncated: Array[Long]) {
 
     /** Buckets that hit the list cap at build time. A truncated bucket
       * keeps its 4096 HIGHEST-df members, but the sole distance-1
@@ -149,14 +163,13 @@ object Spell {
       * queries whose variant set touches a truncated bucket therefore
       * take the exact generate-and-probe fallback below instead of
       * silently diverging from the argmax-df-at-min-distance policy. */
-    def nTruncatedBuckets: Int = truncated.size()
+    def nTruncatedBuckets: Int = truncated.length
 
-    private def touchesTruncated(q: String): Boolean = {
+    private def touchesTruncated(vs: Array[Long]): Boolean = {
       if (truncated.isEmpty) return false
-      val vs = DeleteIndex.variants(q)
       var i = 0
       while (i < vs.length) {
-        if (truncated.contains(vs(i))) return true
+        if (java.util.Arrays.binarySearch(truncated, vs(i)) >= 0) return true
         i += 1
       }
       false
@@ -181,69 +194,112 @@ object Spell {
         out.result()
       })
 
+    /** Term ids of every bucket the variants `vs` hit, sorted, with
+      * duplicates (a term reached through several variants) kept. */
+    private def candidates(vs: Array[Long]): Array[Int] = {
+      val slots = new Array[Int](vs.length)
+      var total = 0
+      var i = 0
+      while (i < vs.length) {
+        val k = java.util.Arrays.binarySearch(keys, vs(i))
+        slots(i) = k
+        if (k >= 0) total += offsets(k + 1) - offsets(k)
+        i += 1
+      }
+      val out = new Array[Int](total)
+      var w = 0
+      i = 0
+      while (i < slots.length) {
+        val k = slots(i)
+        if (k >= 0) {
+          val len = offsets(k + 1) - offsets(k)
+          System.arraycopy(ids, offsets(k), out, w, len)
+          w += len
+        }
+        i += 1
+      }
+      java.util.Arrays.sort(out)
+      out
+    }
+
     /** Reference policy over the index: known → unchanged; else argmax
       * df among distance-1 candidates; else among distance-2; ties
       * lexicographic; none → unchanged. Queries touching a truncated
       * bucket route to the exact generate-and-probe path (same policy,
       * immune to capped-list eviction). */
     def correct(q: String): String = {
-      if (touchesTruncated(q)) return exactFallback(q)
-      val cands = new java.util.HashSet[Integer]()
-      DeleteIndex.variants(q).foreach { h =>
-        val hit = map.get(h)
-        if (hit != null) { var i = 0; while (i < hit.length) { cands.add(hit(i)); i += 1 } }
-      }
+      val vs = DeleteIndex.variants(q)
+      if (touchesTruncated(vs)) return exactFallback(q)
+      val cands = candidates(vs)
       var best: String = null
       var bestDf = -1L
       var bestDist = 3
       lazy val e1 = edits1(q).toArray // shared across candidate checks
-      val it = cands.iterator()
-      while (it.hasNext) {
-        val idx = it.next().intValue()
-        val t = terms(idx)
-        if (t == q) return q
-        val d = composedDist2(q, t, e1)
-        if (d <= 2) {
-          val df = dfs(idx)
-          if (d < bestDist ||
-              (d == bestDist && (df > bestDf || (df == bestDf && (best == null || t < best))))) {
-            best = t; bestDf = df; bestDist = d
+      var i = 0
+      while (i < cands.length) {
+        val idx = cands(i)
+        if (i == 0 || idx != cands(i - 1)) {
+          val t = terms(idx)
+          if (t == q) return q
+          val d = composedDist2(q, t, e1)
+          if (d <= 2) {
+            val df = dfs(idx)
+            if (d < bestDist ||
+                (d == bestDist && (df > bestDf || (df == bestDf && (best == null || t < best))))) {
+              best = t; bestDf = df; bestDist = d
+            }
           }
         }
+        i += 1
       }
       if (best == null) q else best
     }
 
-    /** Binary artifact dump (format DeleteIndex.Magic): vocabulary, the
-      * variant-hash posting map, and the truncated-bucket set. Written
-      * once at index-build time; an executor materializes the whole
-      * structure with one sequential read instead of re-hashing every
-      * vocab term's O(len²) delete neighborhood per JVM. */
+    /** Binary artifact dump, format `DeleteIndex.Magic` ("GSP2"); all
+      * integers big-endian:
+      * {{{
+      *   int magic, int nTerms, int nKeys, int nIds, int nTruncated
+      *   nTerms × writeUTF(term)            -- df-desc, then lexicographic
+      *   nKeys × long key                   -- sorted variant hashes
+      *   nTruncated × long key              -- sorted capped-bucket hashes
+      *   int nBytes, nBytes of varbyte:     -- Codec.varbyteEncode coding
+      *     nTerms × df
+      *     nKeys × bucket length
+      *     per bucket: first term id, then the gaps to the next id
+      * }}}
+      * Written once at index-build time; an engine materializes the
+      * whole structure with one sequential read instead of re-hashing
+      * every vocab term's O(len²) delete neighborhood per JVM. The
+      * bytes are a pure function of the index, so two builds of one
+      * vocabulary, or a load followed by a save, write identical
+      * files. */
     def save(out: java.io.DataOutputStream): Unit = {
       out.writeInt(DeleteIndex.Magic)
       out.writeInt(terms.length)
-      var i = 0
-      while (i < terms.length) {
-        out.writeUTF(terms(i)); out.writeLong(dfs(i)); i += 1
+      out.writeInt(keys.length)
+      out.writeInt(ids.length)
+      out.writeInt(truncated.length)
+      terms.foreach(out.writeUTF)
+      DeleteIndex.writeLongs(out, keys)
+      DeleteIndex.writeLongs(out, truncated)
+      val vb = new DeleteIndex.VarbyteWriter(terms.length + keys.length + ids.length)
+      dfs.foreach(vb.put)
+      var k = 0
+      while (k < keys.length) { vb.put(offsets(k + 1) - offsets(k)); k += 1 }
+      k = 0
+      while (k < keys.length) {
+        var j = offsets(k)
+        var prev = 0
+        while (j < offsets(k + 1)) { vb.put(ids(j) - prev); prev = ids(j); j += 1 }
+        k += 1
       }
-      out.writeInt(map.size())
-      val it = map.entrySet().iterator()
-      while (it.hasNext) {
-        val e = it.next()
-        out.writeLong(e.getKey.longValue())
-        val v = e.getValue
-        out.writeInt(v.length)
-        var j = 0
-        while (j < v.length) { out.writeInt(v(j)); j += 1 }
-      }
-      out.writeInt(truncated.size())
-      val tit = truncated.iterator()
-      while (tit.hasNext) out.writeLong(tit.next().longValue())
+      out.writeInt(vb.len)
+      out.write(vb.buf, 0, vb.len)
     }
   }
 
   object DeleteIndex {
-    val Magic = 0x47535031 // "GSP1"
+    val Magic = 0x47535032 // "GSP2"
     /** Longest term that gets 2-delete variants (len²/2 of them); longer
       * terms index only 1-deletes — so queries beyond this length have
       * edit-1 reach only (a DOCUMENTED approximation: correcting a
@@ -288,7 +344,7 @@ object Spell {
       h
     }
 
-    /** Hashes of s and its distinct 1- and 2-delete variants. */
+    /** Hashes of s and its distinct 1- and 2-delete variants, sorted. */
     private[Spell] def variants(s: String): Array[Long] = {
       val n = s.length
       val two = n <= MaxLen2
@@ -305,31 +361,21 @@ object Spell {
         }
         i += 1
       }
-      // distinct (deleting either of two equal adjacent chars collides):
-      // sort + unique in place of the boxed HashSet
+      // distinct: deleting either of two equal adjacent chars collides
       java.util.Arrays.sort(buf, 0, c)
+      unique(buf, c)
+    }
+
+    /** The distinct values of the sorted prefix `buf(0 until n)`,
+      * compacted in place; `buf` itself when nothing was dropped. */
+    private def unique(buf: Array[Long], n: Int): Array[Long] = {
       var w = 0
       var r = 0
-      while (r < c) {
+      while (r < n) {
         if (w == 0 || buf(r) != buf(w - 1)) { buf(w) = buf(r); w += 1 }
         r += 1
       }
-      if (w == cap) buf else java.util.Arrays.copyOf(buf, w)
-    }
-
-    /** Growable bucket used only during build: copy-per-append on plain
-      * arrays made crowded buckets O(k²) (a 4096-cap bucket cost 8M
-      * element copies). */
-    private final class IntBuf(first: Int) {
-      var arr: Array[Int] = new Array[Int](4)
-      var len: Int = 1
-      arr(0) = first
-      def add(v: Int): Unit = {
-        if (len == arr.length) arr = java.util.Arrays.copyOf(arr, len * 2)
-        arr(len) = v; len += 1
-      }
-      def trimmed: Array[Int] =
-        if (len == arr.length) arr else java.util.Arrays.copyOf(arr, len)
+      if (w == buf.length) buf else java.util.Arrays.copyOf(buf, w)
     }
 
     /** Upper bound on delete-index entries for a vocabulary — the SAME
@@ -345,90 +391,192 @@ object Spell {
       entries
     }
 
-    def build(vocab: Iterable[(String, Long)],
-              maxListLen: Int = MaxListLen): DeleteIndex = {
-      // df-desc insertion order => capped lists keep the argmax-df picks
-      val sorted = vocab.toArray.sortBy { case (t, df) => (-df, t) }
-      val terms = sorted.map(_._1)
-      val dfs = sorted.map(_._2)
-      // variant hashing is the CPU of the build and embarrassingly
-      // parallel; precompute per-term hash arrays across a small pool
-      // (determinism unaffected — insertion below stays sequential
-      // term-major, which is what the df-desc cap semantics need)
-      val varr = new Array[Array[Long]](terms.length)
+    /** Run `body(from, until)` over `[0, n)` in contiguous chunks on a
+      * small pool (one chunk inline when `n` is small). */
+    private def inChunks(n: Int)(body: (Int, Int) => Unit): Unit = {
       val nThreads =
-        if (terms.length < 4096) 1
-        else math.min(8, Runtime.getRuntime.availableProcessors())
-      if (nThreads == 1) {
-        var i = 0
-        while (i < terms.length) { varr(i) = variants(terms(i)); i += 1 }
-      } else {
+        if (n < 4096) 1 else math.min(8, Runtime.getRuntime.availableProcessors())
+      if (nThreads == 1) body(0, n)
+      else {
         val pool = java.util.concurrent.Executors.newFixedThreadPool(nThreads)
         try {
-          val chunk = (terms.length + nThreads - 1) / nThreads
+          val chunk = (n + nThreads - 1) / nThreads
           (0 until nThreads).map { t =>
             pool.submit(new Runnable {
-              def run(): Unit = {
-                var i = t * chunk
-                val end = math.min(terms.length, i + chunk)
-                while (i < end) { varr(i) = variants(terms(i)); i += 1 }
-              }
+              def run(): Unit =
+                body(math.min(n, t * chunk), math.min(n, (t + 1) * chunk))
             })
           }.foreach(_.get())
         } finally pool.shutdown()
       }
-      val bufs = new java.util.HashMap[java.lang.Long, IntBuf](terms.length * 4)
-      val truncated = new java.util.HashSet[java.lang.Long]()
-      var idx = 0
-      while (idx < terms.length) {
-        val vs = varr(idx)
-        varr(idx) = null // release as consumed
-        var v = 0
-        while (v < vs.length) {
-          val key = java.lang.Long.valueOf(vs(v))
-          val cur = bufs.get(key)
-          if (cur == null) bufs.put(key, new IntBuf(idx))
-          else if (cur.len < maxListLen) cur.add(idx)
-          else truncated.add(key) // observable: these route to exact fallback
-          v += 1
-        }
-        idx += 1
-      }
-      val map = new java.util.HashMap[java.lang.Long, Array[Int]](bufs.size() * 2)
-      val it = bufs.entrySet().iterator()
-      while (it.hasNext) {
-        val e = it.next()
-        map.put(e.getKey, e.getValue.trimmed)
-      }
-      new DeleteIndex(terms, dfs, map, truncated)
     }
 
-    /** Load an artifact written by [[DeleteIndex.save]]. */
+    /** Count → prefix-sum → fill over the per-term variant arrays. Term
+      * ids are assigned in df-descending order and each bucket is filled
+      * term-major, so a capped bucket keeps its `maxListLen`
+      * highest-df members. */
+    def build(vocab: Iterable[(String, Long)],
+              maxListLen: Int = MaxListLen): DeleteIndex = {
+      val sorted = vocab.toArray.sortWith { (a, b) =>
+        a._2 > b._2 || (a._2 == b._2 && a._1 < b._1)
+      }
+      val terms = sorted.map(_._1)
+      val dfs = sorted.map(_._2)
+      val n = terms.length
+      // variant hashing is the CPU of the build and embarrassingly
+      // parallel; determinism is unaffected (every later pass is keyed
+      // by term id, not by completion order)
+      val varr = new Array[Array[Long]](n)
+      inChunks(n) { (from, until) =>
+        var i = from
+        while (i < until) { varr(i) = variants(terms(i)); i += 1 }
+      }
+      // term t's entries are flat(start(t) until start(t + 1))
+      val start = new Array[Int](n + 1)
+      var total = 0L
+      var t = 0
+      while (t < n) {
+        total += varr(t).length
+        require(total < Int.MaxValue - 8, s"delete index too large: $total+ entries")
+        start(t + 1) = total.toInt
+        t += 1
+      }
+      val flat = new Array[Long](start(n))
+      t = 0
+      while (t < n) {
+        System.arraycopy(varr(t), 0, flat, start(t), varr(t).length)
+        varr(t) = null // release as consumed
+        t += 1
+      }
+      val keys = {
+        val a = flat.clone()
+        java.util.Arrays.parallelSort(a)
+        unique(a, a.length)
+      }
+      val slot = new Array[Int](flat.length)
+      inChunks(flat.length) { (from, until) =>
+        var e = from
+        while (e < until) { slot(e) = java.util.Arrays.binarySearch(keys, flat(e)); e += 1 }
+      }
+      val count = new Array[Int](keys.length)
+      slot.foreach(k => count(k) += 1)
+      val offsets = new Array[Int](keys.length + 1)
+      val trunc = Array.newBuilder[Long]
+      var k = 0
+      while (k < keys.length) {
+        // observable: these route to the exact fallback
+        if (count(k) > maxListLen) trunc += keys(k)
+        offsets(k + 1) = offsets(k) + math.min(count(k), maxListLen)
+        count(k) = offsets(k) // from here on: bucket k's fill cursor
+        k += 1
+      }
+      val ids = new Array[Int](offsets(keys.length))
+      t = 0
+      while (t < n) {
+        var e = start(t)
+        while (e < start(t + 1)) {
+          val b = slot(e)
+          if (count(b) < offsets(b + 1)) { ids(count(b)) = t; count(b) += 1 }
+          e += 1
+        }
+        t += 1
+      }
+      new DeleteIndex(terms, dfs, keys, offsets, ids, trunc.result())
+    }
+
+    private def writeLongs(out: java.io.DataOutputStream, a: Array[Long]): Unit = {
+      val bb = java.nio.ByteBuffer.allocate(a.length * 8)
+      bb.asLongBuffer().put(a)
+      out.write(bb.array())
+    }
+
+    private def readLongs(in: java.io.DataInputStream, n: Int): Array[Long] = {
+      val bytes = new Array[Byte](n * 8)
+      in.readFully(bytes)
+      val a = new Array[Long](n)
+      java.nio.ByteBuffer.wrap(bytes).asLongBuffer().get(a)
+      a
+    }
+
+    /** Growable byte buffer with `Codec.varbyteEncode`'s coding (7 bits
+      * per byte, low group first, high bit = more follows), minus its
+      * boxed `ArrayBuffer[Byte]`. */
+    private final class VarbyteWriter(sizeHint: Int) {
+      var buf = new Array[Byte](math.max(16, sizeHint))
+      var len = 0
+      def put(v0: Long): Unit = {
+        require(v0 >= 0, s"varbyte requires non-negative, got $v0")
+        if (len + 10 > buf.length) buf = java.util.Arrays.copyOf(buf, buf.length * 2)
+        var v = v0
+        while ((v & ~0x7FL) != 0) {
+          buf(len) = ((v & 0x7F) | 0x80).toByte; len += 1
+          v >>>= 7
+        }
+        buf(len) = v.toByte; len += 1
+      }
+    }
+
+    /** `Codec.varbyteDecode`'s loop, one value at a time, with the
+      * bound check that keeps a corrupt id out of the term arrays. */
+    private final class VarbyteReader(buf: Array[Byte]) {
+      var pos = 0
+      def next(): Long = {
+        var v = 0L
+        var shift = 0
+        var b = buf(pos); pos += 1
+        while ((b & 0x80) != 0) {
+          v |= (b & 0x7FL) << shift
+          shift += 7
+          b = buf(pos); pos += 1
+        }
+        v | ((b & 0x7FL) << shift)
+      }
+      def nextInt(bound: Int): Int = {
+        val v = next()
+        require(v >= 0 && v < bound, s"corrupt spell index: $v not below $bound")
+        v.toInt
+      }
+    }
+
+    /** Load an artifact written by [[DeleteIndex.save]]; any other
+      * format, or a truncated or inconsistent file, throws. */
     def load(in: java.io.DataInputStream): DeleteIndex = {
       val magic = in.readInt()
       require(magic == Magic, f"bad spell-index magic 0x$magic%08x")
-      val n = in.readInt()
-      val terms = new Array[String](n)
-      val dfs = new Array[Long](n)
-      var i = 0
-      while (i < n) { terms(i) = in.readUTF(); dfs(i) = in.readLong(); i += 1 }
+      val nTerms = in.readInt()
       val nKeys = in.readInt()
-      val map = new java.util.HashMap[java.lang.Long, Array[Int]](nKeys * 2)
+      val nIds = in.readInt()
+      val nTrunc = in.readInt()
+      require(nTerms >= 0 && nKeys >= 0 && nIds >= 0 && nTrunc >= 0 &&
+        nKeys <= Int.MaxValue / 8 && nTrunc <= nKeys,
+        s"corrupt spell index header: $nTerms/$nKeys/$nIds/$nTrunc")
+      val terms = Array.fill(nTerms)(in.readUTF())
+      val keys = readLongs(in, nKeys)
+      val truncated = readLongs(in, nTrunc)
+      val vb = new VarbyteReader({
+        val a = new Array[Byte](in.readInt()); in.readFully(a); a
+      })
+      val dfs = Array.fill(nTerms)(vb.next())
+      val offsets = new Array[Int](nKeys + 1)
       var k = 0
       while (k < nKeys) {
-        val key = in.readLong()
-        val len = in.readInt()
-        val arr = new Array[Int](len)
-        var j = 0
-        while (j < len) { arr(j) = in.readInt(); j += 1 }
-        map.put(key, arr)
+        offsets(k + 1) = offsets(k) + vb.nextInt(nIds - offsets(k) + 1)
         k += 1
       }
-      val nTrunc = in.readInt()
-      val truncated = new java.util.HashSet[java.lang.Long](nTrunc * 2 + 16)
-      var t = 0
-      while (t < nTrunc) { truncated.add(in.readLong()); t += 1 }
-      new DeleteIndex(terms, dfs, map, truncated)
+      require(offsets(nKeys) == nIds, s"corrupt spell index: ${offsets(nKeys)} ids, header says $nIds")
+      val ids = new Array[Int](nIds)
+      k = 0
+      while (k < nKeys) {
+        var j = offsets(k)
+        var prev = 0
+        while (j < offsets(k + 1)) {
+          prev += vb.nextInt(nTerms - prev)
+          ids(j) = prev
+          j += 1
+        }
+        k += 1
+      }
+      new DeleteIndex(terms, dfs, keys, offsets, ids, truncated)
     }
   }
 }

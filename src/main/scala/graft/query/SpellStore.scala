@@ -9,6 +9,13 @@ import graft.index.SegmentStore
   * delete neighborhood — on its first unknown-term miss, and scan-mode
   * driver engines paid a 2M-row collect for the same privilege).
   *
+  * The file is `delete_index.bin` in the one format that
+  * [[Spell.DeleteIndex.save]] documents ("GSP2"): the flat arrays in
+  * bulk, with bucket lengths and each bucket's ascending term ids
+  * delta-varbyte coded. There is no reader for any other format: a
+  * file with another magic (an older index) loads as None, and engines
+  * rebuild the index from `term_stats`.
+  *
   * Goes through Hadoop FileSystem like the posting segments, so the
   * artifact rides file://, HDFS or S3A; writes are tmp + rename for the
   * same crash-visibility story as the segment markers. A cold engine
@@ -31,9 +38,9 @@ object SpellStore {
   }
 
   /** None when no artifact exists (pre-artifact indexes, or builds whose
-    * vocabulary exceeded the entry budget) — callers keep their lazy
-    * fallback. A corrupt artifact also returns None rather than failing
-    * the query path; correction then degrades gracefully. */
+    * vocabulary exceeded the entry budget), when it is in another
+    * format, or when it is corrupt — callers keep their lazy fallback, so correction degrades
+    * gracefully instead of failing the query path. */
   def load(spellDir: String): Option[Spell.DeleteIndex] =
     try {
       val fs = SegmentStore.fs(spellDir)

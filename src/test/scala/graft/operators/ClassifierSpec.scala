@@ -88,6 +88,25 @@ class ClassifierSpec extends SparkSpec {
       s"featurization must be map-only (no shuffle):\n$plan")
   }
 
+  test("q58 featurize is locale-independent: a Turkish default locale folds I like ROOT") {
+    import spark.implicits._
+    val dir = tmpDir("clf-locale")
+    Seq((0L, "LIST ITEM INDEX Is It"), (1L, "plain words only"))
+      .toDF("doc_id", "text")
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    def features: Seq[(Long, Seq[Int], Seq[Double])] =
+      Classifier.featurize(spark, dir).collect()
+        .map(ex => (ex.docId, ex.idx.toSeq, ex.v.toSeq)).sortBy(_._1).toSeq
+    val saved = java.util.Locale.getDefault
+    val root =
+      try { java.util.Locale.setDefault(java.util.Locale.ROOT); features }
+      finally java.util.Locale.setDefault(saved)
+    val turkish =
+      try { java.util.Locale.setDefault(java.util.Locale.forLanguageTag("tr-TR")); features }
+      finally java.util.Locale.setDefault(saved)
+    assert(turkish == root)
+  }
+
   test("q58 on the driver corpus: runs end-to-end and reports a real accuracy") {
     import spark.implicits._
     val out = Classifier.qualityClassifier(spark, "/root/testdata/sf0.001")

@@ -126,6 +126,55 @@ class QuerySurfaceSpec extends SparkSpec {
     assert(SpellStore.load(tmpDir("graft-nospell")).isEmpty) // missing => None
   }
 
+  test("spell artifact bytes are a pure function of the vocabulary: rebuild and load+save are byte-identical") {
+    val r = new scala.util.Random(19)
+    val vocab: Map[String, Long] =
+      ((0 until 400).map(i => graft.corpus.Synth.coldTerm(i) -> (1L + r.nextInt(50))) ++
+        Seq("spark" -> 100L, "quartz" -> 7L, "aa" -> 7L, "ab" -> 7L)).toMap
+    def bytesOf(ix: Spell.DeleteIndex): Array[Byte] = {
+      val bos = new java.io.ByteArrayOutputStream()
+      val out = new java.io.DataOutputStream(bos)
+      ix.save(out); out.flush()
+      bos.toByteArray
+    }
+    // a shuffled input order and a capped build exercise the df-desc
+    // ordering and the truncated-key section too
+    for (cap <- Seq(Spell.DeleteIndex.MaxListLen, 2)) {
+      val ix = Spell.DeleteIndex.build(vocab, cap)
+      assert((ix.nTruncatedBuckets > 0) == (cap == 2))
+      val a = bytesOf(ix)
+      val b = bytesOf(Spell.DeleteIndex.build(r.shuffle(vocab.toSeq), cap))
+      assert(java.util.Arrays.equals(a, b), s"two builds differ (cap $cap)")
+      val reloaded = Spell.DeleteIndex.load(
+        new java.io.DataInputStream(new java.io.ByteArrayInputStream(a)))
+      assert(java.util.Arrays.equals(a, bytesOf(reloaded)),
+        s"load + save is not byte-identical (cap $cap)")
+    }
+  }
+
+  test("an artifact in the old GSP1 format loads as None; the engine corrects through the lazy path") {
+    import spark.implicits._
+    val docs = Seq(
+      (0L, "gamma gamma gamma delta"), (1L, "gamma epsilon"),
+      (2L, "gamma delta")).toDF("doc_id", "content")
+    val idx = tmpDir("graft-oldspell-index")
+    Build.run(spark, docs, idx, Build.Config(numPartitions = 2,
+      verifySha = false, tokenizer = Tokenizer.plainCfg))
+    val art = new java.io.File(SpellStore.path(s"$idx/spell").toUri.getPath)
+    assert(SpellStore.load(s"$idx/spell").isDefined)
+    // overwrite the magic with "GSP1": the rest of the file is left
+    // as it is, so only the format tag decides
+    val raf = new java.io.RandomAccessFile(art, "rw")
+    try raf.writeInt(0x47535031) finally raf.close()
+    assert(SpellStore.load(s"$idx/spell").isEmpty, "GSP1 must not be read")
+    val eng = new Engine(spark, idx, Tokenizer.plainCfg,
+      pruneSingletons = false, preload = false, eagerSpell = true)
+    try {
+      assert(eng.searchWand("gamm", 10).map(_._1).toSet == Set(0L, 1L, 2L))
+      assert(eng.searchWand("gamxx", 10).map(_._1).toSet == Set(0L, 1L, 2L))
+    } finally eng.close()
+  }
+
   test("index build persists the spell artifact; a cold core corrects WITHOUT any vocab load") {
     import spark.implicits._
     val docs = Seq(
