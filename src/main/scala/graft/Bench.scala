@@ -2,20 +2,18 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Benchmark main (driver contract): one JSON line on stdout.
+/** Benchmark main (driver contract): the 61-query wall at
+  * SPARK_GRAFT_SF_DIR, as two JSON lines on stdout — the full record,
+  * then a compact headline that is always the LAST line — plus the same
+  * two lines in `bench_out.json` (SPARK_GRAFT_BENCH_OUT overrides).
   *
-  * Reports the BASELINE.json headline metrics:
-  *  - per-query wall times for every SparkEntry query at
-  *    SPARK_GRAFT_SF_DIR (the driver's round benchmark),
-  *  - index-build throughput (docs/sec) on the synthetic code corpus,
-  *  - top-k BM25 query p50/p95 latency (ms, warm, k=250),
-  *  - throughput scaling efficiency between N and 4N cores on identical
-  *    input — the sandbox stand-in for N vs 4N executors per
-  *    BASELINE.md's measurement protocol.
-  *
-  * Each scaling measurement runs in a FRESH forked JVM (graft.BuildBench)
-  * — the analog of separate `spark-submit`s per cluster size; sharing one
-  * JVM contaminated timings with cross-run GC/JIT state.
+  * Every query runs QueryRounds times, INTERLEAVED round-robin (all
+  * queries once, then again), so a burst of hypervisor steal degrades one
+  * round of many queries rather than every run of one query; each query
+  * reports the min over its successful rounds, the estimator least
+  * sensitive to one-sided steal noise. Build, serving and per-layer
+  * figures are the repository's benchmark (`perfbench/`, BENCHMARK.json),
+  * not this main's.
   */
 object Bench {
 
@@ -25,128 +23,31 @@ object Bench {
     (r, (System.nanoTime() - t0) / 1e9)
   }
 
-  private val addOpens = Seq(
-    "java.base/java.lang", "java.base/java.lang.invoke",
-    "java.base/java.lang.reflect", "java.base/java.io",
-    "java.base/java.net", "java.base/java.nio",
-    "java.base/java.util", "java.base/java.util.concurrent",
-    "java.base/java.util.concurrent.atomic",
-    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-    "java.base/sun.security.action", "java.base/sun.util.calendar"
-  ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-
-  /** Fork one measurement JVM; returns its KEY=VALUE output lines.
-    * `spec` is BuildBench's parallelism spec: "N" → local[N], "WxC" →
-    * local-cluster[W,C,...] (forked executor JVMs). */
-  private def fork(spec: String, corpusDir: String, idxDir: String,
-                   latency: Boolean): Map[String, String] = {
-    val javaBin = s"${System.getProperty("java.home")}/bin/java"
-    // fixed pre-touched heap: demand-zeroing a growing multi-GB heap
-    // under 32 allocating threads page-fault-storms the whole stage
-    // (measured 6-10x wall-clock swings); pre-touch removes it
-    val mem = sys.env.getOrElse("SPARK_BENCH_MEM", "16g")
-    // Deliberately NOT -XX:ActiveProcessorCount=N: pinning the JVM's
-    // processor view to the rung size was measured (2026-08-19) and
-    // REJECTED — it shrinks GC workers with N while the 16g heap stays
-    // fixed, so the mid rung pays GC stalls a real cluster (whose heap
-    // and GC capacity grow with executor count) never pays: build 2→8
-    // read 0.706 pinned vs 0.833 unpinned in back-to-back clean
-    // windows, with the 8c rung 14% slower and 2c unchanged. The
-    // executor-faithful scaling evidence is the local-cluster ladder
-    // below (whole executor JVMs of fixed shape), not a pinned thread
-    // pool.
-    val cmd = Seq(javaBin, s"-Xms$mem", s"-Xmx$mem",
-      "-XX:+AlwaysPreTouch") ++ addOpens ++ Seq(
-      "-Dspark.ui.enabled=false", "-cp", System.getProperty("java.class.path"),
-      "graft.BuildBench", spec, corpusDir, idxDir) ++
-      (if (latency) Seq("latency") else Nil)
-    val out = new StringBuilder
-    val pb = new ProcessBuilder(cmd: _*).redirectErrorStream(false)
-    // local-cluster executor launch resolves Spark through SPARK_HOME
-    // (and skips source-tree probing via SPARK_SCALA_VERSION); harmless
-    // for plain local[N] forks
-    if (new java.io.File("/opt/spark/jars").isDirectory) {
-      pb.environment().put("SPARK_HOME", "/opt/spark")
-      pb.environment().put("SPARK_SCALA_VERSION", "2.13")
-    }
-    val proc = pb.start()
-    // watchdog: a wedged child (e.g. an executor that failed to
-    // register in cluster mode) would otherwise block the whole bench
-    // on readLine() forever — far beyond any legitimate run (~2 min)
-    val watchdog = new java.util.Timer(true)
-    watchdog.schedule(new java.util.TimerTask {
-      def run(): Unit = proc.destroyForcibly()
-    }, 15L * 60 * 1000)
-    val rd = new java.io.BufferedReader(
-      new java.io.InputStreamReader(proc.getInputStream))
-    val drainErr = new Thread(() => {
-      val er = new java.io.BufferedReader(
-        new java.io.InputStreamReader(proc.getErrorStream))
-      while (er.readLine() != null) {} // discard child logs
-    })
-    drainErr.setDaemon(true); drainErr.start()
-    var line = rd.readLine()
-    while (line != null) { out.append(line).append('\n'); line = rd.readLine() }
-    val code = proc.waitFor()
-    watchdog.cancel()
-    require(code == 0, s"BuildBench child (spec=$spec) exited $code")
-    out.toString.linesIterator
-      .filter(_.startsWith("BENCH_"))
-      .map { l => val Array(k, v) = l.split("=", 2); k -> v }
-      .toMap
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    // 60k docs ≈ 4-minute bench end-to-end: big enough that compute
-    // dominates fixed stage costs, small enough for a per-round run
-    val buildDocs = sys.env.getOrElse("SPARK_GRAFT_BENCH_DOCS", "60000").toLong
-    // below 4 cores there is no N-vs-4N pair to measure at all (nCores
-    // would equal cpus and the ladder would self-compare) — but that
-    // only invalidates the LADDER: the driver-contract query section
-    // still runs and reports (round-2 review: a whole-main require()
-    // lost the query numbers too on small boxes)
-    val ladder = cpus >= 4
-    if (!ladder) System.err.println(
-      s"[bench] cpus=$cpus < 4: skipping the scaling ladder (needs an N/4N pair)")
-    val nCores = math.max(1, cpus / 4)
-
-    // 1. driver-contract queries at sfDir + corpus synth (one session).
-    // Every query runs QueryRounds times, INTERLEAVED round-robin (all
-    // queries once, then again) so a hypervisor-steal burst degrades one
-    // round of many queries rather than every run of one query; reported
-    // per-query value is the min over its rounds — the estimator least
-    // sensitive to this box's one-sided steal noise (same protocol as
-    // the build ladder; round-2 review: single-shot query numbers made
-    // round-over-round deltas unfalsifiable).
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
     val QueryRounds = 3
-    val corpusDir = java.nio.file.Files
-      .createTempDirectory("graft-bench-corpus").toString
-    val (queryRuns: Seq[(String, Seq[Double])], labelsBuildSec: Double) = {
-      val spark = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    val (queryRuns: Seq[(String, Seq[Double])], labelsBuildSec: Double) =
       try {
         // untimed session warmup: without it the alphabetically-first
         // query absorbs all JIT/codegen/classload cost (~4s)
         spark.read.parquet(s"$sfDir/region.parquet").count()
         spark.sql("SELECT sum(id) FROM range(1000000)").collect()
         // warm q09's per-JVM index cache untimed so its timed number is
-        // a QUERY latency, not a hidden index build (the build
-        // throughput metric below measures building explicitly)
+        // a QUERY latency, not a hidden index build
         graft.operators.IndexOps.indexFor(spark, sfDir)
-        // cold dup-label artifact build, TIMED and reported as its own
-        // build-side metric: q32/q40/q42 all ride the materialized label
-        // table, so their min-of-rounds numbers are (correctly) warm
-        // artifact READS — without this split the closure's cold cost
-        // (shingle join + star contraction) vanished from the report
-        // entirely (round-4 review). Fresh JVM per bench run ⇒ the
-        // cache is guaranteed cold here.
+        // cold dup-label artifact build, TIMED and reported on its own:
+        // q32/q40/q42 ride the materialized label table, so their
+        // min-of-rounds numbers are warm artifact READS — without this
+        // split the closure's cold cost would vanish from the report
         val (_, labelsSec) = timed {
           graft.operators.DupClusters.labels(spark, sfDir).count()
         }
@@ -161,204 +62,19 @@ object Bench {
             name -> sec
           }
         }
-        val qt = names.map { case (name, _) =>
+        (names.map { case (name, _) =>
           name -> runs.map(_.find(_._1 == name).get._2)
-        }
-        if (ladder) graft.corpus.Synth.write(spark, buildDocs, corpusDir)
-        (qt, labelsSec)
+        }, labelsSec)
       } finally {
         spark.stop()
         SparkSession.clearActiveSession()
         SparkSession.clearDefaultSession()
       }
-    }
     // min over the query's SUCCESSFUL rounds (-1 sentinel only if all failed)
     val queryTimes: Seq[(String, Double)] = queryRuns.map { case (n, rs) =>
       val ok = rs.filter(_ >= 0)
       n -> (if (ok.nonEmpty) ok.min else -1.0)
     }
-
-    // 2. scaling ladder: identical input + code at local[N], local[4N]
-    // and local[16N] (N=2 on the 32-core box), fresh JVM per measurement
-    // (the analog of separate spark-submits per cluster size), runs
-    // INTERLEAVED so page-cache and run-order effects hit every level
-    // symmetrically, best-of-N per level because this box is a
-    // shared-host VM: bursts of hypervisor steal inflate individual runs
-    // 2x+ (measured), and min is the estimator least sensitive to that
-    // one-sided noise.
-    //
-    // The HEADLINE N->4N pair is local[2] -> local[8], where the
-    // pipeline's own pure-JVM kernel still scales near its ALU bound.
-    // Measured probes (graft.ScaleProbe / graft.TokBench, BASELINE.md
-    // round-2 scaling analysis): ALU spin scales 2->8 at 0.99 and 8->32
-    // at 0.95 (the vCPUs are real); a private-buffer streaming read
-    // saturates the box's ONE shared memory system from 2 threads on
-    // (2->8 eff 0.46, one thread already pulls ~12% of the box's
-    // ~148 GB/s); and the no-Spark tokenize kernel — the exact code the
-    // build runs — lands between them at 0.85 (2->8) but 0.44 (8->32).
-    // The Spark build tracks its own kernel's envelope at every level,
-    // i.e. the single-box decay is the memory system acting on the
-    // kernel, not Spark orchestration. A real N->4N EXECUTOR scale-out
-    // multiplies memory controllers by 4, which is exactly the resource
-    // this box cannot multiply; the 8->32 same-box pair is reported
-    // alongside as the conservative bound, and each measurement carries
-    // its hypervisor-steal percentage so noisy windows are visible.
-    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
-    val scratch = scala.collection.mutable.ArrayBuffer(corpusDir)
-    def one(spec: String, latency: Boolean): Map[String, String] = {
-      val idx = tmp(s"graft-idx-$spec")
-      scratch += idx
-      fork(spec, s"$corpusDir/snapshot-0", idx, latency)
-    }
-    // 2 on the 32-core box; guarded distinct from nCores so a small
-    // SPARK_GRAFT_CPUS can't degenerate the headline pair into a
-    // same-parallelism self-ratio (and duplicate JSON keys)
-    val nLow = {
-      val cand = math.max(1, cpus / 16)
-      if (cand >= nCores) math.max(1, nCores / 4) else cand
-    }
-    val degenerate = nLow >= nCores
-    // 3 fully interleaved rounds of (low, N, 4N): IDENTICAL run counts
-    // per level — min-of-k under one-sided steal noise favors whichever
-    // level gets more tries, so asymmetric counts would bias the
-    // efficiency ratios (review finding), and interleaving spreads
-    // slow-window effects across all levels
-    // latency is measured in EVERY 32c fork and reported as the min
-    // over rounds — a single-window latency number can land entirely
-    // inside a steal storm (observed: p95 30 ms in a 15.8%-steal window
-    // vs 4 ms clean), same one-sided-noise argument as the build times
-    //
-    // Bounded noise recovery: hypervisor-steal storms on this shared
-    // box are one-sided (they only INFLATE wall times) and can span a
-    // whole 3-round window — one observed window read 2→8 at 0.73 with
-    // 4.7–16.4% steal on the slow forks vs 0.83 clean. Under a min
-    // estimator, more i.i.d. tries only converge toward the true floor,
-    // so the bench adds MaxExtra FULL interleaved rounds (every rung
-    // gets exactly one more try per extra round — identical run counts
-    // per rung, the fairness invariant above). The extra rounds run
-    // UNCONDITIONALLY: an earlier version fired them only when the
-    // headline ratio read below target, which is outcome-dependent
-    // optional stopping — with few draws a min-based ratio can read
-    // ABOVE truth when only the fast rung got a clean draw, and a rule
-    // that stops exactly at such states carries a bounded upward bias
-    // (round-4 review). Fixed run counts per rung remove the bias; all
-    // runs, clean and noisy, stay in the reported arrays with their
-    // steal percentages.
-    val MaxExtra =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_MAX_EXTRA_ROUNDS", "2").toInt
-    // Shared extra-round driver for both ladders. A round that THROWS
-    // (wedged fork killed by the watchdog — the steal-storm regime the
-    // extra rounds exist to average over) must not discard the complete
-    // rounds already collected: log and stop instead.
-    def extraRounds[R](buf: scala.collection.mutable.ArrayBuffer[R],
-                       run: () => R, label: String): Unit = {
-      var extra = 0
-      while (extra < MaxExtra) {
-        try buf += run()
-        catch {
-          case e: Throwable =>
-            System.err.println(
-              s"[bench] $label extra round failed (${e.getMessage}); " +
-                "keeping the completed rounds")
-            extra = MaxExtra
-        }
-        extra += 1
-      }
-    }
-    type Round = (Map[String, String], Map[String, String], Map[String, String])
-    def runRound(): Round =
-      (if (degenerate) Map.empty[String, String] else one(nLow.toString, latency = false),
-       one(nCores.toString, latency = false), one(cpus.toString, latency = true))
-    val rounds: Seq[Round] =
-      if (!ladder) Nil
-      else {
-        val buf = scala.collection.mutable.ArrayBuffer.empty[Round]
-        (1 to 3).foreach(_ => buf += runRound())
-        extraRounds(buf, runRound _, s"$nLow->$nCores")
-        buf.toSeq
-      }
-    val low = if (degenerate) Nil else rounds.map(_._1)
-    def secs(rs: Seq[Map[String, String]]) =
-      rs.map(_("BENCH_BUILD_SECONDS").toDouble)
-    def steals(rs: Seq[Map[String, String]]) =
-      rs.map(_.getOrElse("BENCH_STEAL_PCT", "-1"))
-    val (secsLow, secsN, secs4N) =
-      (secs(low), secs(rounds.map(_._2)), secs(rounds.map(_._3)))
-
-    // 3. EXECUTOR scaling ladder: the same build + serving batch on
-    // local-cluster[1,2,6g] vs local-cluster[4,2,6g] — one vs four REAL
-    // forked executor JVMs of identical shape (2 cores, 6 GB heap,
-    // standalone wire protocol, netty shuffle between processes). This
-    // is the faithful form of the two-cluster-size criterion: scaling
-    // adds whole machines (each with its own heap, GC and JIT budget)
-    // instead of widening one JVM's thread pool over one shared heap.
-    // Same interleaving + min-of-3 protocol as the thread ladder. The
-    // host's one memory system is still shared — the known single-box
-    // ceiling documented in BASELINE.md — so the 1w->4w pair uses the
-    // same total-core span (2->8) as the headline thread pair.
-    val execRounds: Seq[(Map[String, String], Map[String, String])] =
-      if (!ladder || cpus < 8 ||
-          sys.env.get("SPARK_GRAFT_EXEC_LADDER").contains("off") ||
-          !new java.io.File("/opt/spark/jars").isDirectory) Nil
-      else {
-        val buf = scala.collection.mutable
-          .ArrayBuffer.empty[(Map[String, String], Map[String, String])]
-        def execRound() =
-          (one("1x2", latency = false), one("4x2", latency = false))
-        try {
-          (1 to 3).foreach(_ => buf += execRound())
-          // same unconditional extra rounds as the thread ladder
-          // (symmetric run counts per rung, min estimator, all runs —
-          // clean and noisy — reported with their steal percentages)
-          extraRounds(buf, execRound _, "exec 1w->4w")
-        } catch { case e: Throwable =>
-          // keep any COMPLETE rounds already collected — three good
-          // rounds are a valid ladder even if a later one died
-          System.err.println(s"[bench] exec ladder failed: ${e.getMessage}" +
-            s" (keeping ${buf.size} completed rounds)")
-        }
-        buf.toSeq
-      }
-    // headline fields mirrored into the COMPACT last stdout line (see
-    // emission below) — filled alongside the full-JSON fragments
-    val headline = scala.collection.mutable.LinkedHashMap.empty[String, String]
-
-    val execJson: String =
-      if (execRounds.isEmpty ||
-          execRounds.exists(r => !r._1.contains("BENCH_BUILD_SECONDS") ||
-                                 !r._2.contains("BENCH_BUILD_SECONDS")))
-        s""""exec_ladder":{"skipped":true},"""
-      else {
-        val s1 = execRounds.map(_._1("BENCH_BUILD_SECONDS").toDouble)
-        val s4 = execRounds.map(_._2("BENCH_BUILD_SECONDS").toDouble)
-        val thr1 = buildDocs / s1.min
-        val thr4 = buildDocs / s4.min
-        def q(rs: Seq[Map[String, String]]) =
-          rs.flatMap(_.get("BENCH_DIST_QPS")).map(_.toDouble)
-            .foldLeft(0.0)(math.max)
-        val (q1, q4) = (q(execRounds.map(_._1)), q(execRounds.map(_._2)))
-        def st(rs: Seq[Map[String, String]]) =
-          rs.map(_.getOrElse("BENCH_STEAL_PCT", "-1")).mkString(",")
-        headline += "exec_build_scaling_efficiency" -> f"${(thr4 / thr1) / 4.0}%.3f"
-        headline += "exec_build_docs_per_sec_1w" -> f"$thr1%.1f"
-        headline += "exec_build_docs_per_sec_4w" -> f"$thr4%.1f"
-        s""""exec_ladder":{"shape":"local-cluster[W,2,6g] W=1->4 (2->8 cores, executor JVMs)",""" +
-        s""""build_docs_per_sec_1w":${f"$thr1%.1f"},""" +
-        s""""build_docs_per_sec_4w":${f"$thr4%.1f"},""" +
-        s""""build_scaling_efficiency":${f"${(thr4 / thr1) / 4.0}%.3f"},""" +
-        s""""dist_qps_1w":${f"$q1%.1f"},"dist_qps_4w":${f"$q4%.1f"},""" +
-        s""""query_scaling_efficiency":${
-          if (q1 > 0) f"${(q4 / q1) / 4.0}%.3f" else "-1"},""" +
-        s""""build_runs_sec":{"1w":[${s1.map(s => f"$s%.2f").mkString(",")}],""" +
-        s""""4w":[${s4.map(s => f"$s%.2f").mkString(",")}]},""" +
-        s""""steal_pct":{"1w":[${st(execRounds.map(_._1))}],""" +
-        s""""4w":[${st(execRounds.map(_._2))}]}},"""
-      }
-
-    scratch.foreach { d =>
-      scala.reflect.io.Directory(new java.io.File(d)).deleteRecursively()
-    }
-
     val qs = queryTimes.map { case (k, v) => s""""$k":$v""" }
       .mkString("{", ",", "}")
     val qRuns = queryRuns.map { case (k, rs) =>
@@ -366,128 +82,22 @@ object Bench {
     }.mkString("{", ",", "}")
     val total = queryTimes.map(_._2).sum
 
-    val ladderJson: String =
-      if (!ladder)
-        s""""scaling_efficiency":-1,"scaling_pair":"skipped(cpus=$cpus<4)","""
-      else {
-        val secLow = if (degenerate) -1.0 else secsLow.min
-        val secN = secsN.min
-        val sec4N = secs4N.min
-        def latMin(key: String): String = {
-          val vs = rounds.map(_._3).flatMap(_.get(key)).map(_.toDouble)
-          if (vs.isEmpty) "-1" else f"${vs.min}%.3f"
-        }
-        val thrLow = if (degenerate) -1.0 else buildDocs / secLow
-        val thrN = buildDocs / secN
-        val thr4N = buildDocs / sec4N
-        val effHead =
-          if (degenerate) -1.0
-          else (thrN / thrLow) / (nCores.toDouble / nLow)          // 2 -> 8
-        val effHigh = (thr4N / thrN) / (cpus.toDouble / nCores)    // 8 -> 32
-        // serving-side scaling: best distributed-batch QPS per level
-        def qps(rs: Seq[Map[String, String]]) =
-          rs.flatMap(_.get("BENCH_DIST_QPS")).map(_.toDouble)
-            .foldLeft(0.0)(math.max)
-        val (qpsLow, qpsN, qps4N) =
-          (qps(low), qps(rounds.map(_._2)), qps(rounds.map(_._3)))
-        // SegmentCache A/B: cache-off QPS at every rung — the serving-
-        // scaling protocol where the FS-read fraction is constant across
-        // rungs (see BuildBench); hit evidence from the 32c forks
-        def qpsNC(rs: Seq[Map[String, String]]) =
-          rs.flatMap(_.get("BENCH_DIST_QPS_NOCACHE")).map(_.toDouble)
-            .foldLeft(0.0)(math.max)
-        val (ncLow, ncN, nc4N) =
-          (qpsNC(low), qpsNC(rounds.map(_._2)), qpsNC(rounds.map(_._3)))
-        // hits/misses reported as a PAIR from the single 32c round with
-        // the best cache-on QPS — maxing each independently across
-        // rounds would report a hit/miss ratio that occurred in no run
-        val bestRound = rounds.map(_._3)
-          .filter(_.contains("BENCH_SEGCACHE_HITS"))
-          .sortBy(m => -m.get("BENCH_DIST_QPS").fold(0.0)(_.toDouble))
-          .headOption
-        def fromBest(key: String): Double =
-          bestRound.flatMap(_.get(key)).fold(0.0)(_.toDouble)
-        val scHits = fromBest("BENCH_SEGCACHE_HITS")
-        val scMiss = fromBest("BENCH_SEGCACHE_MISSES")
-        val qEffHead = if (qpsLow > 0) (qpsN / qpsLow) / (nCores.toDouble / nLow) else -1
-        val qEffHigh = if (qpsN > 0) (qps4N / qpsN) / (cpus.toDouble / nCores) else -1
-        val qEffHeadNC = if (ncLow > 0) (ncN / ncLow) / (nCores.toDouble / nLow) else -1
-        if (!degenerate)
-          headline += s"build_docs_per_sec_${nLow}c" -> f"$thrLow%.1f"
-        headline += s"build_docs_per_sec_${nCores}c" -> f"$thrN%.1f"
-        headline += s"build_docs_per_sec_${cpus}c" -> f"$thr4N%.1f"
-        headline += "scaling_efficiency" -> f"$effHead%.3f"
-        headline += s"scaling_efficiency_${nCores}_$cpus" -> f"$effHigh%.3f"
-        headline += s"dist_qps_${cpus}c" -> f"$qps4N%.1f"
-        headline += s"dist_qps_nocache_${cpus}c" -> f"$nc4N%.1f"
-        headline += "query_scaling_efficiency" -> f"$qEffHead%.3f"
-        headline += "query_scaling_efficiency_nocache" -> f"$qEffHeadNC%.3f"
-        headline += "query_p50_ms" -> latMin("BENCH_P50_MS")
-        headline += "query_p95_ms" -> latMin("BENCH_P95_MS")
-        // low-rung fragments are omitted entirely when degenerate —
-        // emitting them would duplicate the "${nCores}c" keys and make
-        // the JSON parser-dependent (strict parsers reject dup keys)
-        def lowFrag(f: => String): String = if (degenerate) "" else f
-        lowFrag(s""""build_docs_per_sec_${nLow}c":${f"$thrLow%.1f"},""") +
-        s""""build_docs_per_sec_${nCores}c":${f"$thrN%.1f"},""" +
-        s""""build_docs_per_sec_${cpus}c":${f"$thr4N%.1f"},""" +
-        s""""scaling_efficiency":${f"$effHead%.3f"},""" +
-        s""""scaling_pair":"${if (degenerate) "degenerate(see_" + nCores + "_" + cpus + ")"
-           else s"local[$nLow]->local[$nCores]"}",""" +
-        s""""scaling_efficiency_${nCores}_$cpus":${f"$effHigh%.3f"},""" +
-        s""""build_runs_sec":{""" +
-        lowFrag(s""""${nLow}c":[${secsLow.map(s => f"$s%.2f").mkString(",")}],""") +
-        s""""${nCores}c":[${secsN.map(s => f"$s%.2f").mkString(",")}],""" +
-        s""""${cpus}c":[${secs4N.map(s => f"$s%.2f").mkString(",")}]},""" +
-        s""""steal_pct":{""" +
-        lowFrag(s""""${nLow}c":[${steals(low).mkString(",")}],""") +
-        s""""${nCores}c":[${steals(rounds.map(_._2)).mkString(",")}],""" +
-        s""""${cpus}c":[${steals(rounds.map(_._3)).mkString(",")}]},""" +
-        s""""dist_qps":{""" +
-        lowFrag(s""""${nLow}c":${f"$qpsLow%.1f"},""") +
-        s""""${nCores}c":${f"$qpsN%.1f"},""" +
-        s""""${cpus}c":${f"$qps4N%.1f"}},""" +
-        s""""dist_qps_nocache":{""" +
-        lowFrag(s""""${nLow}c":${f"$ncLow%.1f"},""") +
-        s""""${nCores}c":${f"$ncN%.1f"},""" +
-        s""""${cpus}c":${f"$nc4N%.1f"}},""" +
-        s""""segcache_hits":${scHits.toLong},""" +
-        s""""segcache_misses":${scMiss.toLong},""" +
-        s""""query_scaling_efficiency":${f"$qEffHead%.3f"},""" +
-        s""""query_scaling_efficiency_nocache":${f"$qEffHeadNC%.3f"},""" +
-        s""""query_scaling_efficiency_${nCores}_$cpus":${f"$qEffHigh%.3f"},""" +
-        s""""query_p50_ms":${latMin("BENCH_P50_MS")},""" +
-        s""""query_p95_ms":${latMin("BENCH_P95_MS")},"""
-      }
-
     val json =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
       s""""query_runs_sec":$qRuns,"query_rounds":$QueryRounds,"sf":"$sfDir",""" +
-      s""""build_docs":$buildDocs,""" +
-      s""""labels_build_sec":${f"$labelsBuildSec%.3f"},""" +
-      ladderJson + execJson +
-      s""""query_k":250}"""
-
-    // COMPACT headline-only mirror: totals, throughputs, efficiencies,
-    // latencies — no per-query maps or run arrays, so the whole object
-    // is a few hundred bytes and survives ANY stdout tail window. The
-    // full JSON above exceeded the driver's tail buffer four rounds
-    // running (BENCH_r04 `tail` starts mid-object ⇒ parsed:null), so
-    // the compact line is printed LAST and is the line the driver's
-    // parser lands on.
+      s""""query_count":${queryTimes.size},""" +
+      s""""query_total_sec":${f"$total%.3f"},""" +
+      s""""labels_build_sec":${f"$labelsBuildSec%.3f"}}"""
+    // COMPACT headline-only mirror, printed LAST: no per-query maps or
+    // run arrays, so the whole object survives any stdout tail window
+    // (the full line above overflowed the driver's tail buffer)
     val compact =
       s"""{"metric":"total","value":$total,"unit":"sec","compact":true,""" +
       s""""sf":"$sfDir","query_count":${queryTimes.size},""" +
       s""""query_total_sec":${f"$total%.3f"},""" +
       s""""labels_build_sec":${f"$labelsBuildSec%.3f"},""" +
-      s""""build_docs":$buildDocs,""" +
-      headline.map { case (k, v) => s""""$k":$v,""" }.mkString +
       s""""full":"bench_out.json"}"""
 
-    // stdout for the driver AND a side file as the canonical
-    // machine-readable record — sbt wraps stdout in "[info] " prefixes,
-    // which broke the driver's strict line parser (round-2 review:
-    // BENCH_r02.json carried `parsed: null`)
     println(json)
     println(compact)
     val outPath = java.nio.file.Paths.get(

@@ -46,30 +46,22 @@ object Build {
     * performance heuristic, so over-selecting near the boundary is
     * harmless (salted≡unsalted is proven in IndexSpec) while exact df
     * would cost a full aggregation pass. 1.0 = exact (the default;
-    * small-corpus tests pin specific salting outcomes). */
-  /** `stagingMode`:
-    *  - "parquet": materialize the tokenize pass as a staging parquet
-    *    dir; the sha gate runs as soon as it lands, and the dir is
-    *    deleted once the build commits (no reader of a built index
-    *    needs it),
-    *  - "cache": persist the postings MEMORY_AND_DISK_SER in the block
-    *    manager — skips the parquet encode/decode round-trip; spills to
-    *    executor disk at scale like any shuffle, recomputes from lineage
-    *    on executor loss,
-    *  - "none": no materialization; each consumer re-tokenizes. */
+    * small-corpus tests pin specific salting outcomes).
+    *
+    * Staging is not configurable: the tokenize pass is materialized once
+    * as an uncompressed parquet dir (snappy's JNI critical sections
+    * stalled allocation-heavy tokenizer threads; staging is transient),
+    * the sha gate runs as soon as it lands, and the dir is deleted once
+    * the build commits (no reader of a built index needs it). */
   final case class Config(
       numPartitions: Int = 32,
       nSalts: Int = 8,
       saltDfThreshold: Long = 100000,
-      stagingMode: String = "parquet",
-      stagingCodec: String = "uncompressed",
       verifySha: Boolean = true,
       heavySampleFraction: Double = 1.0,
       tokenizer: Tokenizer.Config = Tokenizer.default,
       spellIndex: Boolean = true,
       shuffleMode: String = "rows") {
-    require(Set("parquet", "cache", "none")(stagingMode),
-      s"unknown stagingMode $stagingMode")
     require(Set("rows", "runs")(shuffleMode),
       s"unknown shuffleMode $shuffleMode")
   }
@@ -170,10 +162,12 @@ object Build {
   def trySpellArtifact(spark: SparkSession, indexDir: String): Unit =
     try {
       import spark.implicits._
-      val stats = spark.read.parquet(s"$indexDir/term_stats")
-      if (stats.count() <= 2000000L) {
-        val vocab = stats
-          .select($"term", $"df").as[(String, Long)].collect()
+      // one scan: the limit over-fetches by one row, so an oversized vocab
+      // is detected by the same read that collects it (Engine.allStats)
+      val vocab = spark.read.parquet(s"$indexDir/term_stats")
+        .select($"term", $"df").limit(graft.query.Engine.MaxSpellVocab + 1)
+        .as[(String, Long)].collect()
+      if (vocab.length <= graft.query.Engine.MaxSpellVocab) {
         val budget = graft.query.EngineCore.MaxSpellIndexEntries
         val est = graft.query.Spell.DeleteIndex.entryEstimate(
           vocab.iterator.map(_._1), budget)
@@ -207,52 +201,23 @@ object Build {
       if (cfg.verifySha) Some(spark.sparkContext.longAccumulator("shaViolations"))
       else None
     val stagingDir = s"$indexDir/staging_postings"
-    val postings: DataFrame = phase("tokenize+verify+stage") {
-      cfg.stagingMode match {
-        case "parquet" =>
-          // default uncompressed staging: snappy's JNI critical sections
-          // (GCLocker) stall allocation-heavy tokenizer threads at high
-          // parallelism; staging is transient, trading space for
-          // wall-clock. lz4 (pure-JVM) is the knob when staging IO volume
-          // itself becomes the contention at high core counts.
-          postingsVerified(spark, docsWithId, cfg.tokenizer, shaAcc)
-            .write.mode(SaveMode.Overwrite)
-            .option("compression", cfg.stagingCodec)
-            .parquet(stagingDir)
-          spark.read.parquet(stagingDir)
-        case "cache" =>
-          val df = postingsVerified(spark, docsWithId, cfg.tokenizer, shaAcc).toDF()
-          df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-          df // materialized by the first consumer job
-        case _ =>
-          postingsVerified(spark, docsWithId, cfg.tokenizer, shaAcc).toDF()
-      }
+    phase("tokenize+verify+stage") {
+      postingsVerified(spark, docsWithId, cfg.tokenizer, shaAcc)
+        .write.mode(SaveMode.Overwrite)
+        .option("compression", "uncompressed")
+        .parquet(stagingDir)
     }
-    // EARLY sha gate: with parquet staging the accumulator is final the
-    // moment the staging write lands, so a violating corpus aborts HERE
-    // — before any stats/dict/segment file exists in indexDir — rather
-    // than leaving a complete-looking index behind and then throwing
-    // (review finding: a reader that only opens the index files, never
-    // the markers, would serve invariant-violating data)
-    if (cfg.stagingMode == "parquet") {
-      val early = shaAcc.map(_.value.toLong).getOrElse(0L)
-      require(early == 0, s"$early rows fail the sha256 ingest invariant")
-    }
-    try {
-      val res = runFromPostings(spark, postings, indexDir, cfg,
-        shaAcc.map(_.value.toLong).getOrElse(0L))
-      // with cache/none staging the accumulator is only final once the
-      // consumer jobs ran; an overcount from task retries can only push
-      // a true violation count further from zero, never mask one
-      val shaViol = shaAcc.map(_.value.toLong).getOrElse(0L)
-      require(shaViol == 0, s"$shaViol rows fail the sha256 ingest invariant")
-      if (cfg.stagingMode == "parquet")
-        SegmentStore.fs(stagingDir)
-          .delete(new org.apache.hadoop.fs.Path(stagingDir), true)
-      res.copy(shaViolations = shaViol)
-    } finally {
-      if (cfg.stagingMode == "cache") postings.unpersist(blocking = false)
-    }
+    // sha gate: the accumulator is final the moment the staging write
+    // lands, so a violating corpus aborts HERE — before any stats/dict/
+    // segment file exists in indexDir — rather than leaving a
+    // complete-looking index behind and then throwing
+    val shaViol = shaAcc.map(_.value.toLong).getOrElse(0L)
+    require(shaViol == 0, s"$shaViol rows fail the sha256 ingest invariant")
+    val res = runFromPostings(spark, spark.read.parquet(stagingDir),
+      indexDir, cfg, shaViol)
+    SegmentStore.fs(stagingDir)
+      .delete(new org.apache.hadoop.fs.Path(stagingDir), true)
+    res
   }
 
   /** The post-tokenize build stages over an existing postings frame —

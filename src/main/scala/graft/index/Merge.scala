@@ -98,9 +98,13 @@ object Merge {
   }
 
   /** Merge `parts` (built over docId-disjoint corpora) into `outDir`.
-    * Validates disjointness via doc_stats ranges. `spellIndex=false`
-    * skips regenerating the spell artifact (engines fall back to the
-    * lazy bounded delete-index build). */
+    * Validates, before anything is written under `outDir`: docId-range
+    * disjointness (via doc_stats), each part's format
+    * ([[CorpusStats.read]], which also checks the ts artifact of every
+    * part carrying recency), and one analysis fingerprint across the parts and across
+    * their positional sidecars. `spellIndex=false` skips regenerating
+    * the spell artifact (engines fall back to the lazy bounded
+    * delete-index build). */
   def disjoint(spark: SparkSession, parts: Seq[String], outDir: String,
                spellIndex: Boolean = true): Unit = {
     import spark.implicits._
@@ -123,23 +127,57 @@ object Merge {
       case _ =>
     }
 
-    // ---- validate analysis-chain compatibility: merging indexes built
-    // with different tokenizer configs (stemmed vs unstemmed, different
-    // stopword sets) would union incompatible term spaces — df/idf
-    // silently wrong and half the corpus unfindable. Build persists its
-    // analysis fingerprint in corpus_stats.tok_cfg; parts predating the
-    // column are tolerated (nothing to compare), any two DEFINED
-    // fingerprints must agree.
-    val tokCfgs = parts.flatMap { p =>
-      val cs = spark.read.parquet(s"$p/corpus_stats")
-      if (cs.columns.contains("tok_cfg"))
-        Option(cs.select($"tok_cfg").head().getString(0)).map(p -> _)
-      else None
-    }
-    require(tokCfgs.map(_._2).distinct.size <= 1,
+    // ---- validate each part's format and the analysis chain: merging
+    // indexes built with different tokenizer configs (stemmed vs
+    // unstemmed, different stopword sets) would union incompatible term
+    // spaces — df/idf silently wrong and half the corpus unfindable.
+    // CorpusStats.read also refuses a part that carries recency without
+    // its ts artifact: those stores are linked below, never regenerated.
+    val partStats = parts.map(p => CorpusStats.read(spark, p))
+    require(partStats.map(_.tokCfg).distinct.size == 1,
       "parts were built with different tokenizer configs — refusing to " +
         "merge incompatible term spaces: " +
-        tokCfgs.map { case (p, c) => s"$p -> $c" }.mkString("; "))
+        parts.zip(partStats).map { case (p, cs) => s"$p -> ${cs.tokCfg}" }
+          .mkString("; "))
+
+    // ---- positional sidecar (PosStore): carried iff EVERY part has it
+    // — positions are opt-in, so "none have it" merges to none; a MIXED
+    // set cannot merge to a correct phrase index (phrases spanning the
+    // position-less part's docs would silently vanish), so the merged
+    // index omits the sidecar LOUDLY and PhraseSearcher's existence
+    // check fails fast on it. The sidecar's own analysis fingerprint
+    // must agree too: the main indexes may share a tok_cfg while the
+    // sidecars were built with different profiles (buildPosStore takes
+    // its own config), and merging those unions incompatible
+    // term/POSITION spaces. The fingerprint rides every pos marker's
+    // lineage (stem|plain|sw fragment), a merged sidecar's included.
+    val partsWithPos = parts.filter(PosStore.exists)
+    val posCfg: Option[String] =
+      if (partsWithPos.size < parts.size) None
+      else {
+        val posCfgs = parts.map { p =>
+          val pd = PosStore.posDir(p)
+          val fsIn = SegmentStore.fs(pd)
+          val markers = fsIn.listStatus(new Path(s"$pd/_markers"))
+            .filter(_.getPath.getName.endsWith(".json"))
+          require(markers.nonEmpty, s"no pos markers under $pd — corrupt sidecar")
+          val in: java.io.InputStream = fsIn.open(markers.head.getPath)
+          val lineage =
+            try SegmentStore.mapper.readValue(in,
+              classOf[SegmentStore.PartitionMarker]).lineage
+            finally in.close()
+          val frag = "stem=[^|]*\\|plain=[^|]*(\\|sw=[^|]*)?".r
+            .findFirstIn(lineage)
+          require(frag.isDefined, s"$pd marker lineage carries no analysis " +
+            s"fingerprint: $lineage")
+          p -> frag.get
+        }
+        require(posCfgs.map(_._2).distinct.size == 1,
+          "positional sidecars were built with different tokenizer " +
+            "configs — refusing to merge incompatible phrase spaces: " +
+            posCfgs.map { case (p, c) => s"$p -> $c" }.mkString("; "))
+        Some(posCfgs.head._2)
+      }
 
     val fsOut = SegmentStore.fs(outDir)
     fsOut.mkdirs(new Path(s"$outDir/segments/_markers"))
@@ -166,106 +204,44 @@ object Merge {
       linkAndRepoint(spark, s"$p/segments", s"$p/dict",
         s"$outDir/segments", i, "dict")
     }
-    // allowMissingColumns everywhere below: a part built by an earlier
-    // engine generation may lack newer columns (ingest_ts in doc_stats,
-    // cf in dict/term_stats); absent values fill with the engine's
-    // neutral defaults instead of failing the upgrade merge
-    // ensureCol (not na.fill alone): when EVERY part predates a column,
-    // the union has no such column at all — na.fill on a missing column
-    // is a silent no-op and downstream reads/aggs would fail
-    def ensureCol(df: org.apache.spark.sql.DataFrame, c: String,
-                  dflt: org.apache.spark.sql.Column) =
-      if (df.columns.contains(c)) df.na.fill(0L, Seq(c))
-      else df.withColumn(c, dflt)
-    ensureCol(dicts.reduce(_.unionByName(_, allowMissingColumns = true)),
-        "cf", lit(0L))
+    dicts.reduce(_.unionByName(_))
       .write.mode(SaveMode.Overwrite).parquet(s"$outDir/dict")
 
-    // ---- positional sidecar (PosStore): carried iff EVERY part has it
-    // — positions are opt-in, so "none have it" merges to none; a MIXED
-    // set cannot merge to a correct phrase index (phrases spanning the
-    // position-less part's docs would silently vanish), so the merged
-    // index omits the sidecar LOUDLY and PhraseSearcher's existence
-    // check fails fast on it. Same flat epoch-scoped link + dict
-    // re-point discipline as the segments above. -----------------------
-    val partsWithPos = parts.filter(PosStore.exists)
-    if (partsWithPos.size == parts.size) {
-      // analysis-chain compatibility, the sidecar's own form of the
-      // tok_cfg check above: the main indexes may share a tok_cfg while
-      // the sidecars were built with different profiles (buildPosStore
-      // takes its own config) — merging those unions incompatible
-      // term/POSITION spaces, so phrase queries would silently miss or
-      // mis-place matches for one part's docs. The fingerprint rides
-      // every pos marker's lineage (stem|plain|sw fragment).
-      val posCfgs = parts.map { p =>
-        val pd = PosStore.posDir(p)
-        val fsIn = SegmentStore.fs(pd)
-        val markers = fsIn.listStatus(new Path(s"$pd/_markers"))
-          .filter(_.getPath.getName.endsWith(".json"))
-        require(markers.nonEmpty, s"no pos markers under $pd — corrupt sidecar")
-        val in: java.io.InputStream = fsIn.open(markers.head.getPath)
-        val lineage =
-          try SegmentStore.mapper.readValue(in,
-            classOf[SegmentStore.PartitionMarker]).lineage
-          finally in.close()
-        val frag = "stem=[^|]*\\|plain=[^|]*(\\|sw=[^|]*)?".r
-          .findFirstIn(lineage)
-        require(frag.isDefined, s"$pd marker lineage carries no analysis " +
-          s"fingerprint: $lineage")
-        p -> frag.get
-      }
-      require(posCfgs.map(_._2).distinct.size <= 1,
-        "positional sidecars were built with different tokenizer " +
-          "configs — refusing to merge incompatible phrase spaces: " +
-          posCfgs.map { case (p, c) => s"$p -> $c" }.mkString("; "))
-      fsOut.mkdirs(new Path(s"$outDir/pos/_markers"))
-      val posDicts = parts.zipWithIndex.map { case (p, i) =>
-        linkAndRepoint(spark, PosStore.posDir(p), PosStore.dictDir(p),
-          s"$outDir/pos", i, "pos_dict")
-      }
-      posDicts.reduce(_.unionByName(_, allowMissingColumns = true))
-        .write.mode(SaveMode.Overwrite).parquet(s"$outDir/pos_dict")
-    } else if (partsWithPos.nonEmpty) {
-      System.err.println(
-        s"[merge] positional sidecar dropped: only ${partsWithPos.size}/" +
-          s"${parts.size} parts carry positions — rebuild the sidecar on " +
-          s"the merged corpus (Build.buildPosStore) to restore phrase " +
-          s"queries")
+    posCfg match {
+      case Some(cfg) =>
+        // the merged sidecar's one marker persists the validated
+        // fingerprint, so a chained re-merge checks it like a built part's
+        SegmentStore.writeMarker(s"$outDir/pos", SegmentStore.PartitionMarker(
+          0, Nil, 0L, 0L, s"pos|merged|$cfg", Nil))
+        val posDicts = parts.zipWithIndex.map { case (p, i) =>
+          linkAndRepoint(spark, PosStore.posDir(p), PosStore.dictDir(p),
+            s"$outDir/pos", i, "pos_dict")
+        }
+        posDicts.reduce(_.unionByName(_))
+          .write.mode(SaveMode.Overwrite).parquet(s"$outDir/pos_dict")
+      case None if partsWithPos.nonEmpty =>
+        System.err.println(
+          s"[merge] positional sidecar dropped: only ${partsWithPos.size}/" +
+            s"${parts.size} parts carry positions — rebuild the sidecar on " +
+            s"the merged corpus (Build.buildPosStore) to restore phrase " +
+            s"queries")
+      case None =>
     }
 
     // ---- stats: union / sum ------------------------------------------
-    // ingest_ts = 0 for pre-recency docs == "oldest", exactly the
-    // engine's tsOf default for docs missing from the timestamp map
-    ensureCol(parts.map(p => spark.read.parquet(s"$p/doc_stats"))
-        .reduce(_.unionByName(_, allowMissingColumns = true)),
-        "ingest_ts", lit(0L))
+    parts.map(p => spark.read.parquet(s"$p/doc_stats")).reduce(_.unionByName(_))
       .write.mode(SaveMode.Overwrite).parquet(s"$outDir/doc_stats")
 
-    ensureCol(parts.map(p => spark.read.parquet(s"$p/term_stats"))
-        .reduce(_.unionByName(_, allowMissingColumns = true)),
-        "cf", lit(0L))
+    parts.map(p => spark.read.parquet(s"$p/term_stats")).reduce(_.unionByName(_))
       .groupBy($"term")
       .agg(sum($"df").as("df"), sum($"cf").as("cf"))
       .write.mode(SaveMode.Overwrite).parquet(s"$outDir/term_stats")
 
     val totals = ranges.map(_._3).sum
-    val partStats = parts.map { p =>
-      val cs = spark.read.parquet(s"$p/corpus_stats")
-      val a = cs.select($"avgdl").head().getDouble(0)
-      // a part that is itself a merge result carries its own scale —
-      // its stored bounds are only valid multiplied by it
-      val s = if (cs.columns.contains("bound_scale"))
-        cs.select($"bound_scale").head().getDouble(0) else 1.0
-      val (tMin, tMax) = if (cs.columns.contains("ts_min")) {
-        val r = cs.select($"ts_min", $"ts_max").head()
-        (r.getLong(0), r.getLong(1))
-      } else (0L, 0L)
-      (a, s, tMin, tMax)
-    }
-    val avgdl = partStats.map(_._1).zip(ranges)
+    val avgdl = partStats.map(_.avgdl).zip(ranges)
       .map { case (a, (_, _, n)) => a * n }.sum / totals
-    val tsMin = partStats.map(_._3).min
-    val tsMax = partStats.map(_._4).max
+    val tsMin = partStats.map(_.tsMin).min
+    val tsMax = partStats.map(_.tsMax).max
     // Block-max bounds were encoded against each PART's avgdl; U(tf,dl)
     // grows with avgdl, and sup over (tf,dl) of U(a_new)/U(a_old) is
     // a_new/a_old. Each part's guarantee is partScale * storedBound >=
@@ -274,44 +250,30 @@ object Merge {
     // part stays a true upper bound (rank identity, SURVEY hard-part 3)
     // at the cost of slightly looser pruning.
     val boundScale = partStats
-      .map { case (a, s, _, _) => s * math.max(1.0, avgdl / a) }.max
-    val mergedCs = Seq((totals, avgdl, boundScale, tsMin, tsMax))
-      .toDF("n_docs", "avgdl", "bound_scale", "ts_min", "ts_max")
-    // carry the (validated-common) analysis fingerprint forward so
+      .map(cs => cs.boundScale * math.max(1.0, avgdl / cs.avgdl)).max
+    // the (validated-common) analysis fingerprint carries forward so
     // chained re-merges keep enforcing compatibility
-    tokCfgs.headOption.map(_._2)
-      .fold(mergedCs)(c => mergedCs.withColumn("tok_cfg", lit(c)))
+    Seq((totals, avgdl, boundScale, tsMin, tsMax, partStats.head.tokCfg))
+      .toDF("n_docs", "avgdl", "bound_scale", "ts_min", "ts_max", "tok_cfg")
       .write.mode(SaveMode.Overwrite).parquet(s"$outDir/corpus_stats")
 
     // ---- ts artifact: doc ranges are disjoint, so part stores LINK
     // under flat names (t<part>-<idx>.bin — a chained re-merge
     // re-flattens instead of compounding prefixes) and their manifests
-    // concatenate. Only a legacy part that carries recency but predates
-    // the artifact forces a regenerate from the merged doc_stats. ------
-    val anyTs = partStats.exists(s => s._3 != 0L || s._4 != 0L)
-    if (anyTs) {
-      val linkable = parts.zip(partStats).forall {
-        case (p, (_, _, tMin, tMax)) =>
-          (tMin == 0L && tMax == 0L) || TsStore.exists(s"$p/ts")
+    // concatenate; an all-zero-ts part has no store and adds nothing. --
+    if (partStats.exists(_.carriesTs)) {
+      fsOut.mkdirs(new Path(s"$outDir/ts"))
+      val metas = parts.zipWithIndex.flatMap { case (p, i) =>
+        val fsIn = SegmentStore.fs(s"$p/ts")
+        TsStore.readManifest(s"$p/ts").getOrElse(Seq.empty)
+          .zipWithIndex.map { case (tf, j) =>
+            val nn = s"t$i-$j.bin"
+            linkOrCopy(fsIn, new Path(s"$p/ts/${tf.name}"),
+              fsOut, new Path(s"$outDir/ts/$nn"))
+            tf.copy(name = nn)
+          }
       }
-      if (linkable) {
-        fsOut.mkdirs(new Path(s"$outDir/ts"))
-        val metas = parts.zipWithIndex.flatMap { case (p, i) =>
-          val fsIn = SegmentStore.fs(s"$p/ts")
-          TsStore.readManifest(s"$p/ts").getOrElse(Seq.empty)
-            .zipWithIndex.map { case (tf, j) =>
-              val nn = s"t$i-$j.bin"
-              linkOrCopy(fsIn, new Path(s"$p/ts/${tf.name}"),
-                fsOut, new Path(s"$outDir/ts/$nn"))
-              tf.copy(name = nn)
-            }
-        }
-        TsStore.writeManifest(s"$outDir/ts", metas)
-      } else {
-        TsStore.write(spark, spark.read.parquet(s"$outDir/doc_stats"),
-          s"$outDir/ts",
-          math.max(1, math.min(1024, (totals / 2000000L).toInt + 1)))
-      }
+      TsStore.writeManifest(s"$outDir/ts", metas)
     }
 
     // ---- spell artifact: the delete-variant index keys on the UNION
@@ -354,8 +316,7 @@ object Merge {
     * pointers carry over verbatim. All other metadata links/copies;
     * corpus_stats is rewritten with bound_scale=1. */
   def compact(spark: SparkSession, indexDir: String, outDir: String): Unit = {
-    val cs = spark.read.parquet(s"$indexDir/corpus_stats").head()
-    val avgdl = cs.getAs[Double]("avgdl")
+    val avgdl = CorpusStats.read(spark, indexDir).avgdl
 
     val fsIn = SegmentStore.fs(indexDir)
     val fsOut = SegmentStore.fs(outDir)

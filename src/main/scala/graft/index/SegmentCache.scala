@@ -39,8 +39,9 @@ package graft.index
   */
 object SegmentCache {
 
-  /** Capacity in bytes; resolved once per JVM. 0 disables the cache
-    * (the A/B lever: BuildBench measures dist QPS at both settings). */
+  /** Capacity in bytes; resolved once per JVM (`graft.segcache.mb`,
+    * default 64). 0 disables the cache; perfbench sets 1 MiB to match its
+    * few-MiB index. */
   @volatile var capacityBytes: Long =
     java.lang.Long.getLong("graft.segcache.mb", 64L) << 20
 

@@ -4,9 +4,9 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Keyed point-read store for the recency-tiebreak timestamps: the
-  * scale-safe replacement of `Engine.loadTs`'s doc-count collect (and
-  * the DistributedRunner doc-count broadcast) on tie-aware indexes. The
+/** Keyed point-read store for the recency-tiebreak timestamps, written
+  * by every build whose corpus carries a nonzero ingest_ts: nothing
+  * doc-count-sized is collected or broadcast on tie-aware indexes. The
   * reference materializes its whole docs_dict at startup
   * (search_engine.py:65-69); at 10^12 docs that habit is ~16 TB through
   * the driver, so ingest_ts instead becomes a BUILD ARTIFACT of

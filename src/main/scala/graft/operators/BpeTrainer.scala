@@ -58,9 +58,13 @@ object BpeTrainer {
     * below it the loop stops early (the tail is noise). */
   val MinPairCount = 2L
   /** Word-end marker symbol (distinguishes "er"+end from mid-word
-    * "er"; the classic BPE formulation). Chosen outside the corpus
-    * alphabet — the tokenizer lowercases and splits on whitespace, so
-    * '</w>' can never collide with a corpus symbol. */
+    * "er"; the classic BPE formulation). No single corpus character
+    * equals it, but symbols grow by merging: a corpus word that contains
+    * the literal text "</w>" can have '<', '/', 'w', '>' merged into a
+    * symbol string-equal to this marker, and from then on that mid-word
+    * symbol and the word end share pair counts. The collision is
+    * accepted, not prevented: it needs that literal in the text, often
+    * enough to win the three merge rounds that build it. */
   val EndMark = "</w>"
 
   private[operators] final case class WordSyms(syms: Array[String], cnt: Long)

@@ -23,9 +23,8 @@ import graft.analysis.Tokenizer
   * Recency tiebreaks on tie-aware indexes ride the same discipline: the
   * index's ts artifact (graft.index.TsStore) serializes as a directory
   * string and executors point-read it only on exact score ties, so
-  * NOTHING doc-count-sized crosses the driver or the broadcast (a
-  * pre-artifact legacy index falls back to the documented array
-  * preload). 10^6 queries against a 10^12-doc index fan out to however
+  * NOTHING doc-count-sized crosses the driver or the broadcast.
+  * 10^6 queries against a 10^12-doc index fan out to however
   * many executors exist with zero coordination. */
 object DistributedRunner {
 
@@ -45,19 +44,9 @@ object DistributedRunner {
           spell: Boolean = true,
           mode: String = "or"): DataFrame = {
     import spark.implicits._
-    val cs = spark.read.parquet(s"$indexDir/corpus_stats")
-    val r = cs.select($"n_docs", $"avgdl").head()
-    val scale = if (cs.columns.contains("bound_scale"))
-      cs.select($"bound_scale").head().getDouble(0) else 1.0
-    val tieAware = cs.columns.contains("ts_min") && {
-      val t = cs.select($"ts_min", $"ts_max").head()
-      t.getLong(0) != t.getLong(1)
-    }
-    val tsSource =
-      if (tieAware) Engine.tsSourceFor(spark, indexDir, eager = true)
-      else new ArrayTsSource(Array.emptyLongArray, Array.emptyLongArray)
-    val core = new EngineCore(r.getLong(0), r.getDouble(1), scale,
-      tieAware, tsSource,
+    val cs = graft.index.CorpusStats.read(spark, indexDir)
+    val core = new EngineCore(cs.nDocs, cs.avgdl, cs.boundScale,
+      cs.tieAware, Engine.tsSourceFor(indexDir, cs),
       Engine.loadResolver(spark, indexDir), s"$indexDir/segments",
       tokCfg, pruneSingletons, spell, spellDir = s"$indexDir/spell")
     val bc = spark.sparkContext.broadcast(core)

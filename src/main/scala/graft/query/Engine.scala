@@ -1,9 +1,8 @@
 package graft.query
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 import graft.analysis.Tokenizer
-import graft.index.SegmentStore
+import graft.index.{CorpusStats, SegmentStore}
 
 /** Query service over a built index: dictionary lookup → pruned segment
   * block fetch → BM25 scoring with block-max WAND top-k (north rule Δ of
@@ -30,21 +29,11 @@ final class Engine(spark: SparkSession, indexDir: String,
                    eagerSpell: Boolean = false) {
   import spark.implicits._
 
-  val (nDocs, avgdl, boundScale, tsMin, tsMax) = {
-    val cs = spark.read.parquet(s"$indexDir/corpus_stats")
-    val r = cs.select($"n_docs", $"avgdl").head()
-    // merged indexes carry a bound inflation factor (Merge scaladoc);
-    // fresh builds don't have the column -> exact bounds (scale 1)
-    val scale = if (cs.columns.contains("bound_scale"))
-      cs.select($"bound_scale").head().getDouble(0) else 1.0
-    // recency range: equal min/max (or a pre-recency index) means no
-    // recency signal -> the per-doc timestamp map is never loaded
-    val (tMin, tMax) = if (cs.columns.contains("ts_min")) {
-      val t = cs.select($"ts_min", $"ts_max").head()
-      (t.getLong(0), t.getLong(1))
-    } else (0L, 0L)
-    (r.getLong(0), r.getDouble(1), scale, tMin, tMax)
-  }
+  private val stats = CorpusStats.read(spark, indexDir)
+  def nDocs: Long = stats.nDocs
+  def avgdl: Double = stats.avgdl
+  // merged indexes carry a bound inflation factor (Merge scaladoc)
+  def boundScale: Double = stats.boundScale
 
   /** Preloaded dictionary (test/bench scale — the reference loads its
     * whole pickled dict at startup, search_engine.py:62-71; at cluster
@@ -79,17 +68,9 @@ final class Engine(spark: SparkSession, indexDir: String,
       }
     }
 
-  /** Recency-tiebreak source: the keyed point-read ts artifact when the
-    * build wrote one (the scale path — nothing doc-count-sized is ever
-    * materialized), else the legacy array preload (pre-artifact indexes
-    * only; the reference's docs_dict habit, search_engine.py:65-69).
-    * Either way the core opens it lazily and only when ties can
-    * actually differ by recency. */
-  private val tsSource: TsSource =
-    Engine.tsSourceFor(spark, indexDir, eager = false)
-
   private val core = new EngineCore(nDocs, avgdl, boundScale,
-    tsMax != tsMin, tsSource, resolver, s"$indexDir/segments",
+    stats.tieAware, Engine.tsSourceFor(indexDir, stats), resolver,
+    s"$indexDir/segments",
     tokCfg, pruneSingletons, spell, spellDir = s"$indexDir/spell")
   // eagerSpell: pay the artifact load (or build) at construction so no
   // user query hides a multi-second first-miss spike (round-2 advice)
@@ -164,33 +145,11 @@ object Engine {
     new PreloadedResolver(stats, dict)
   }
 
-  /** Pick the tiebreak source for an index: the ts artifact when
-    * present (serializes as a directory string — vocab-bound broadcast),
-    * else the doc-count array fallback; `eager` collects the arrays now
-    * (executor-bound cores can't carry a SparkSession), lazy defers to
-    * the first tie (driver engines). */
-  def tsSourceFor(spark: SparkSession, indexDir: String,
-                  eager: Boolean): TsSource = {
-    val tsDir = s"$indexDir/ts"
-    if (graft.index.TsStore.exists(tsDir)) new StoreTsSource(tsDir)
-    else if (eager) {
-      val (ids, vals) = loadTs(spark, indexDir)
-      new ArrayTsSource(ids, vals)
-    } else new TsSource { // driver-only closure
-      def open(): TsLookup = {
-        val (ids, vals) = loadTs(spark, indexDir)
-        new ArrayTsSource(ids, vals).open()
-      }
-    }
-  }
-
-  /** doc_id -> ingest_ts as flat sorted arrays (binary-searched on the
-    * tie path — no boxed-Long map lookups). */
-  def loadTs(spark: SparkSession, indexDir: String): (Array[Long], Array[Long]) = {
-    import spark.implicits._
-    val rows = spark.read.parquet(s"$indexDir/doc_stats")
-      .select($"doc_id", $"ingest_ts").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-    (rows.map(_._1), rows.map(_._2))
-  }
+  /** Recency-tiebreak source: the keyed point-read ts artifact on a
+    * tie-aware index ([[CorpusStats.read]] has checked it exists; it
+    * serializes as a directory string, so the broadcast stays
+    * vocab-bound), else nothing — all timestamps are equal, so no tie
+    * can differ by recency. The core opens it lazily, on the first tie. */
+  def tsSourceFor(indexDir: String, stats: CorpusStats): TsSource =
+    if (stats.tieAware) new StoreTsSource(s"$indexDir/ts") else NoTsSource
 }

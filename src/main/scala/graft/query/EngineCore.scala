@@ -49,17 +49,10 @@ trait TsSource extends Serializable {
   def open(): TsLookup
 }
 
-/** Array-backed source: test/bench-scale preloads and legacy indexes
-  * without a ts artifact (the doc-count materialization the reference
-  * does at startup, search_engine.py:65-69 — Engine's documented
-  * fallback, never the scale path). */
-final class ArrayTsSource(ids: Array[Long], vals: Array[Long]) extends TsSource {
-  def open(): TsLookup = new TsLookup {
-    def tsOf(id: Long): Long = {
-      val i = java.util.Arrays.binarySearch(ids, id)
-      if (i >= 0) vals(i) else 0L
-    }
-  }
+/** The source of an index with no recency signal (every ingest_ts
+  * equal): never consulted, since such a core is not tie-aware. */
+object NoTsSource extends TsSource {
+  def open(): TsLookup = new TsLookup { def tsOf(id: Long): Long = 0L }
 }
 
 /** File-backed source over the index's ts artifact

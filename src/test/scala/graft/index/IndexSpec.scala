@@ -324,22 +324,6 @@ class IndexSpec extends SparkSpec {
     e1.close(); e2.close()
   }
 
-  test("cache staging mode builds an identical-ranking index without a staging dir") {
-    val (idxParquet, _) = built
-    val idx = tmpDir("graft-cache-idx")
-    val res = Build.run(spark, spark.read.parquet(corpusDir), idx,
-      Build.Config(numPartitions = 8, nSalts = 4, saltDfThreshold = 50,
-        stagingMode = "cache"))
-    assert(res.nDocs == 400)
-    assert(!new java.io.File(s"$idx/staging_postings").exists(),
-      "cache mode must not write staging parquet")
-    val e1 = new Engine(spark, idxParquet, preload = true)
-    val e2 = new Engine(spark, idx, preload = true)
-    for (q <- Seq("the if return", "license apache", "getconfig"))
-      assert(e1.searchWand(q, 50).toSeq == e2.searchWand(q, 50).toSeq, s"q=$q")
-    e1.close(); e2.close()
-  }
-
   test("ingest rejects a corpus missing required columns") {
     import spark.implicits._
     val bad = tmpDir("graft-badcorpus")

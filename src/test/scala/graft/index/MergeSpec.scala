@@ -3,7 +3,7 @@ package graft.index
 import graft.SparkSpec
 import graft.analysis.Tokenizer
 import graft.corpus.Synth
-import graft.query.Engine
+import graft.query.{DistributedRunner, Engine}
 
 /** Metadata-only snapshot merge: merged index must answer queries
   * rank-identically to a full rebuild over the union, and WAND must
@@ -161,73 +161,39 @@ class MergeSpec extends SparkSpec {
       Merge.disjoint(spark, Seq(a, b), o))
   }
 
-  test("merging a pre-recency-generation part (no ingest_ts / cf) upgrades instead of failing") {
+  test("a part missing ts_min, ts_max or tok_cfg is refused by merge, engine, runner") {
     import spark.implicits._
-    val docsA = (0L until 80L).map(i =>
-      (i, Synth.content(i))).toDF("doc_id", "content")
-    val docsB = (200L until 280L).map(i =>
-      (i, Synth.content(i))).toDF("doc_id", "content")
-    def build(df: org.apache.spark.sql.DataFrame, name: String): String = {
+    def build(lo: Long, hi: Long, name: String): String = {
       val d = tmpDir(name)
-      Build.run(spark, df, d, Build.Config(numPartitions = 4, nSalts = 2,
-        saltDfThreshold = 60, verifySha = false))
+      Build.run(spark, (lo until hi).map(i => (i, Synth.content(i)))
+        .toDF("doc_id", "content"), d,
+        Build.Config(numPartitions = 2, nSalts = 2, verifySha = false))
       d
     }
-    val idxOldGen = build(docsA, "upgrade-a")
-    val idxNew = build(docsB, "upgrade-b")
-    // strip idxOldGen down to the earlier generation's schema:
-    // doc_stats without ingest_ts, dict/term_stats without cf,
-    // corpus_stats without ts_min/ts_max
-    def rewrite(sub: String, drop: Seq[String]): Unit = {
-      val df = spark.read.parquet(s"$idxOldGen/$sub")
-        .drop(drop: _*).cache()
-      df.count()
-      df.write.mode("overwrite").parquet(s"$idxOldGen/$sub")
-      df.unpersist()
-    }
-    rewrite("doc_stats", Seq("ingest_ts"))
-    rewrite("dict", Seq("cf"))
-    rewrite("term_stats", Seq("cf"))
-    rewrite("corpus_stats", Seq("ts_min", "ts_max"))
-
-    val merged = tmpDir("upgrade-out")
-    Merge.disjoint(spark, Seq(idxOldGen, idxNew), merged)
-    val eng = new Engine(spark, merged, preload = true)
-    assert(eng.nDocs == 160)
-    for (q <- Seq("codec", "server build", "buffer stream schema")) {
-      val w = eng.searchWand(q, 50)
-      assert(w.nonEmpty)
-      // rank identity holds with old-gen docs defaulting to ts=0
-      assert(w.toSeq == eng.searchExhaustive(q, 50).toSeq, s"q=$q")
-    }
-    eng.close()
-
-    // ALL-old-generation merge: the union then has NO newer column at
-    // all, which a bare na.fill would silently skip (review finding) —
-    // the columns must be created with defaults
-    val idxOld2 = build((400L until 460L).map(i =>
-      (i, Synth.content(i))).toDF("doc_id", "content"), "upgrade-c")
-    def strip(idx: String): Unit = {
-      def rw(sub: String, drop: Seq[String]): Unit = {
-        val df = spark.read.parquet(s"$idx/$sub").drop(drop: _*).cache()
-        df.count()
-        df.write.mode("overwrite").parquet(s"$idx/$sub")
-        df.unpersist()
+    val current = build(0L, 40L, "format-ok")
+    val stale = build(100L, 140L, "format-stale")
+    val kept = tmpDir("format-cs")
+    spark.read.parquet(s"$stale/corpus_stats")
+      .write.mode("overwrite").parquet(kept)
+    for (col <- Seq("ts_min", "ts_max", "tok_cfg")) {
+      spark.read.parquet(kept).drop(col)
+        .write.mode("overwrite").parquet(s"$stale/corpus_stats")
+      def refused(f: => Any): Unit = {
+        val e = intercept[IllegalArgumentException](f)
+        assert(e.getMessage.contains(stale) && e.getMessage.contains(col) &&
+          e.getMessage.contains("rebuild"), e.getMessage)
       }
-      rw("doc_stats", Seq("ingest_ts"))
-      rw("dict", Seq("cf"))
-      rw("term_stats", Seq("cf"))
-      rw("corpus_stats", Seq("ts_min", "ts_max"))
+      val out = s"${tmpDir("format-out")}/merged"
+      refused(Merge.disjoint(spark, Seq(current, stale), out))
+      assert(!new java.io.File(out).exists(), s"refused merge wrote under $out")
+      refused(new Engine(spark, stale, preload = true))
+      refused(DistributedRunner.run(spark, stale,
+        Seq((1, "codec")).toDF("query_num", "query")))
     }
-    strip(idxOld2)
-    val merged2 = tmpDir("upgrade-out-oldold")
-    Merge.disjoint(spark, Seq(idxOldGen, idxOld2), merged2)
-    val eng2 = new Engine(spark, merged2, preload = true)
-    assert(eng2.nDocs == 140)
-    val w2 = eng2.searchWand("codec", 30)
-    assert(w2.nonEmpty)
-    assert(w2.toSeq == eng2.searchExhaustive("codec", 30).toSeq)
-    eng2.close()
+    // a fresh build has no bound_scale column: exact bounds, not legacy
+    val eng = new Engine(spark, current, preload = true)
+    assert(eng.boundScale == 1.0 && eng.nDocs == 40)
+    eng.close()
   }
 
   test("replayed merge into the same outDir never truncates the live index through a hard link") {

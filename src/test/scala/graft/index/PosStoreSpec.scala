@@ -259,6 +259,45 @@ class PosStoreSpec extends SparkSpec {
     assert(e.getMessage.contains("different tokenizer configs"))
   }
 
+  test("chained merge with positions equals a one-shot build; a differing chained sidecar is refused") {
+    import spark.implicits._
+    val docs = spark.read.parquet(s"$dir/documents.parquet")
+      .select(col("doc_id"), col("text").as("content"))
+    val Array(t1, t2) = docs.stat
+      .approxQuantile("doc_id", Array(1.0 / 3, 2.0 / 3), 0.0).map(_.toLong)
+    val cfg = Build.Config(numPartitions = 4, nSalts = 2,
+      saltDfThreshold = 50, verifySha = false, tokenizer = Tokenizer.plainCfg)
+    val slices = Seq(docs.filter($"doc_id" <= t1),
+      docs.filter($"doc_id" > t1 && $"doc_id" <= t2), docs.filter($"doc_id" > t2))
+    val Seq(pa, pb, pc) = slices.zipWithIndex.map { case (d, i) =>
+      val p = tmpDir(s"pos-chain-$i")
+      Build.run(spark, d, p, cfg); Build.buildPosStore(spark, d, p, cfg)
+      p
+    }
+    val ab = tmpDir("pos-chain-ab")
+    Merge.disjoint(spark, Seq(pa, pb), ab, spellIndex = false)
+    val abc = tmpDir("pos-chain-abc")
+    Merge.disjoint(spark, Seq(ab, pc), abc, spellIndex = false)
+    assert(PosStore.exists(abc), "every part positional => merged positional")
+    val m = new PhraseSearcher(spark, abc, Tokenizer.plainCfg)
+    val full = new PhraseSearcher(spark, idxDir, Tokenizer.plainCfg)
+    try {
+      Seq("table scan", "the big", "order batch batch").foreach { ph =>
+        assert(m.search(ph).toSeq == full.search(ph).toSeq, s"phrase '$ph'")
+      }
+    } finally { m.close(); full.close() }
+
+    // the merged part's fingerprint is still checked: a third part whose
+    // sidecar was built with the rule pipeline must not chain onto it
+    val pd = tmpDir("pos-chain-rules")
+    Build.run(spark, slices(2), pd, cfg)
+    Build.buildPosStore(spark, slices(2), pd, cfg.copy(tokenizer = Tokenizer.default))
+    val e = intercept[IllegalArgumentException] {
+      Merge.disjoint(spark, Seq(ab, pd), tmpDir("pos-chain-bad"), spellIndex = false)
+    }
+    assert(e.getMessage.contains("different tokenizer configs"), e.getMessage)
+  }
+
   test("resume: a re-run with the same lineage rewrites nothing") {
     val f = SegmentStore.fs(idxDir)
     val posDir = PosStore.posDir(idxDir)

@@ -38,9 +38,9 @@ class TsStoreSpec extends SparkSpec {
     Build.run(spark, withTs, idxA, Build.Config(numPartitions = 2,
       verifySha = false, tokenizer = Tokenizer.plainCfg))
     assert(TsStore.exists(s"$idxA/ts"))
-    assert(Engine.tsSourceFor(spark, idxA, eager = true)
-      .isInstanceOf[StoreTsSource])
-    val lk = Engine.tsSourceFor(spark, idxA, eager = true).open()
+    val csA = CorpusStats.read(spark, idxA)
+    assert(Engine.tsSourceFor(idxA, csA).isInstanceOf[StoreTsSource])
+    val lk = Engine.tsSourceFor(idxA, csA).open()
     (0L until 50L).foreach(i => assert(lk.tsOf(i) == 1000L + i))
     lk.close()
     // no recency signal -> no artifact, nothing to open at query time
@@ -67,7 +67,7 @@ class TsStoreSpec extends SparkSpec {
 
     // the broadcast's ts piece is the directory string, not the arrays:
     // java-serialize the source the runner would use and bound its size
-    val src = Engine.tsSourceFor(spark, idx, eager = true)
+    val src = Engine.tsSourceFor(idx, CorpusStats.read(spark, idx))
     assert(src.isInstanceOf[StoreTsSource])
     val bos = new java.io.ByteArrayOutputStream()
     val oos = new java.io.ObjectOutputStream(bos)
@@ -95,7 +95,7 @@ class TsStoreSpec extends SparkSpec {
     assert(q1 == (0L until n).sortBy(i => (-(5000L + (i * 7919L) % n), i)).take(15))
   }
 
-  test("merge links part stores flat-named; chained re-merge keeps names flat; legacy part regenerates") {
+  test("merge links ts stores flat-named, chained too; a part without ts/ is refused") {
     import spark.implicits._
     def part(lo: Long, hi: Long, dir: String): Unit =
       Build.run(spark, (lo until hi).map(i =>
@@ -120,16 +120,22 @@ class TsStoreSpec extends SparkSpec {
     val r2 = new TsStore.Reader(s"$m2/ts")
     (0L until 60L).foreach(i => assert(r2.tsOf(i) == 100L * i))
     r2.close()
-    // legacy part (recency but pre-artifact): regenerate from doc_stats
+    // a tie-aware part whose ts artifact is gone: refused everywhere,
+    // naming the part and the rebuild, before the merge writes anything
     val d = tmpDir("graft-ts-d")
     part(60L, 80L, d)
-    val fs = SegmentStore.fs(d)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$d/ts"), true)
-    val m3 = tmpDir("graft-ts-m3")
-    Merge.disjoint(spark, Seq(m2, d), m3)
-    assert(TsStore.exists(s"$m3/ts"))
-    val r3 = new TsStore.Reader(s"$m3/ts")
-    (0L until 80L).foreach(i => assert(r3.tsOf(i) == 100L * i))
-    r3.close()
+    SegmentStore.fs(d).delete(new org.apache.hadoop.fs.Path(s"$d/ts"), true)
+    def refused(f: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](f)
+      assert(e.getMessage.contains(d) && e.getMessage.contains("ts/") &&
+        e.getMessage.contains("rebuild"), e.getMessage)
+    }
+    val m3 = s"${tmpDir("graft-ts-m3")}/merged"
+    refused(Merge.disjoint(spark, Seq(m2, d), m3))
+    assert(!new java.io.File(m3).exists(), s"refused merge wrote under $m3")
+    refused(new Engine(spark, d, Tokenizer.plainCfg))
+    refused(DistributedRunner.run(spark, d,
+      Seq((1, "common")).toDF("query_num", "query"),
+      tokCfg = Tokenizer.plainCfg))
   }
 }

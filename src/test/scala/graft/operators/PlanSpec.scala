@@ -75,8 +75,8 @@ class PlanSpec extends SparkSpec {
   test("q11 ngram dedup: hot-shingle cap is partial-agg + anti-join, not a row-sorting window") {
     // inspect the LAZY pair plan (identity pin): the served q11
     // materializes it through jaccardPairsAll, whose checkpoint hides
-    // the kernel from the outer plan; DataScaleSpec's shuffle-record
-    // gate pins the materialized path's single-execution property
+    // the kernel from the outer plan; the shuffle-record gate below
+    // pins the materialized path's single-execution property
     val df = Dedup.jaccardPairsPlan(spark, dir)
     val p = plan(df)
     // a count window over sh would sort-shuffle every (doc_id, sh) row;
@@ -85,6 +85,55 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("Window"), "hot-shingle cap regressed to a window")
     assert(p.toLowerCase.contains("leftanti"), s"anti-join missing:\n${p.take(800)}")
     assert(p.contains("partial_count"), "hot-set aggregation is not map-side partial")
+  }
+
+  test("q11 pair kernel shuffles the shingle relation ONCE: total " +
+    "shuffle records bounded by 2.5x the distinct shingle rows") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    // The ladder's round-5 finding: without the persist pin in
+    // jaccardPairsAll, Catalyst re-executed the scan->explode->dedup
+    // exchange up to 3x (PushDownLeftSemiAntiJoin rewrites the
+    // anti-join's copy, so ReusedExchange can't collapse it) — a
+    // phantom 12x shuffle-record read on the 4x corpus rung. This gate
+    // pins the fix: one dedup exchange + the combined hot-set agg +
+    // cap-bounded pair shuffles must stay under 2.5x the shingle rows
+    // (the old recompute plan measured >= 3x + extras).
+    val d = tmpDir("datascale-q11-gate")
+    val docs = (0 until 300).map { i =>
+      // 40 tokens per doc: unique spine + a shared boilerplate tail so
+      // the hot-set path (df > 50) is exercised too
+      val spine = (0 until 30).map(j => s"w${i}_$j").mkString(" ")
+      val boiler = "the quick brown fox jumps over the lazy dog again"
+      (i.toLong, s"$spine $boiler", "en", "web", 0L)
+    }
+    docs.toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.mode("overwrite").parquet(s"$d/documents.parquet")
+
+    val recs = new java.util.concurrent.atomic.AtomicLong
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onStageCompleted(
+          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+        recs.addAndGet(
+          sc.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten)
+    }
+    val shingleRows = spark.read.parquet(s"$d/documents.parquet")
+      .select($"doc_id", split(lower($"text"), "\\s+").as("toks"))
+      .select($"doc_id", explode(expr(
+        "transform(sequence(0, size(toks)-2), i -> concat(toks[i], ' ', toks[i+1]))"
+      )).as("sh")).distinct().count()
+    org.apache.spark.graftshim.CoreShim
+      .waitListenerBusEmpty(spark.sparkContext, 30000)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val rows = graft.operators.Dedup.ngramJaccard(spark, d).count()
+      assert(rows >= 0)
+      org.apache.spark.graftshim.CoreShim
+        .waitListenerBusEmpty(spark.sparkContext, 30000)
+      assert(recs.get() <= (shingleRows * 2.5).toLong,
+        s"q11 shuffled ${recs.get()} records for $shingleRows shingle rows " +
+          "— the shingle relation is being recomputed/reshuffled")
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("q14 embedding dedup is distributed: parquet-scan sourced, no driver-side vector table") {

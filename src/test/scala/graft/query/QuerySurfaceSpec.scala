@@ -197,7 +197,7 @@ class QuerySurfaceSpec extends SparkSpec {
     val cs = spark.read.parquet(s"$idx/corpus_stats")
       .select($"n_docs", $"avgdl").head()
     val core = new EngineCore(cs.getLong(0), cs.getDouble(1), 1.0,
-      tieAware = false, new ArrayTsSource(Array.empty, Array.empty),
+      tieAware = false, NoTsSource,
       noStats, s"$idx/segments", Tokenizer.plainCfg,
       pruneSingletons = false, spell = true, spellDir = s"$idx/spell")
     core.warmSpell() // the eager knob: cost lands here, not in a query
